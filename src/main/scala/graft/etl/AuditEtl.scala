@@ -2,6 +2,7 @@ package graft.etl
 
 import J._
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** The audit ETL: one client ZIP in → normalized doc + scores + manifest
   * out (reference parity: /root/reference/src/etl.js:93-453 `processZip`).
@@ -23,11 +24,26 @@ object AuditEtl {
 
   final case class Result(normalized: JObj, scores: JObj, manifest: JObj)
 
-  /** JS `String(v ?? '')` + strip + `Number(...)`; NaN for non-numeric. */
+  /** JS `String(v ?? '')` + strip + `Number(...)`; NaN for non-numeric.
+    * One scan keeps the `[0-9.-]` characters; the kept string is numeric
+    * iff it matches `^-?(\d+\.?\d*|\.\d+)$`, i.e. after an optional leading
+    * `-` it has no `-`, at most one `.` and at least one digit. */
   def jsToNum(v: Option[String]): Double = {
-    val s = v.getOrElse("").replaceAll("[^0-9.\\-]", "")
-    if (s.isEmpty) 0.0
-    else if (s.matches("^-?(\\d+\\.?\\d*|\\.\\d+)$")) s.toDouble
+    val in = v.getOrElse("")
+    val kept = new java.lang.StringBuilder(in.length)
+    var digits = 0
+    var dots = 0
+    var innerMinus = false
+    var i = 0
+    while (i < in.length) {
+      val c = in.charAt(i)
+      if (c >= '0' && c <= '9') { digits += 1; kept.append(c) }
+      else if (c == '.') { dots += 1; kept.append(c) }
+      else if (c == '-') { if (kept.length > 0) innerMinus = true; kept.append(c) }
+      i += 1
+    }
+    if (kept.length == 0) 0.0
+    else if (digits > 0 && dots <= 1 && !innerMinus) java.lang.Double.parseDouble(kept.toString)
     else Double.NaN
   }
 
@@ -173,7 +189,7 @@ object AuditEtl {
         prov.set("ahrefs", bool(true))
         mEntry("ahrefs_site_audit.zip").set("status", str("full"))
       } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           mEntry("ahrefs_site_audit.zip").set("status", str("partial"))
           mEntry("ahrefs_site_audit.zip").set("note", str(e.toString))
       }
@@ -235,7 +251,7 @@ object AuditEtl {
             manifest.set(f, JObj("status" -> str("full")))
             prov.set("lighthouse", bool(true))
           } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               manifest.set(f, JObj("status" -> str("partial"),
                 "note" -> str(e.toString)))
           }
@@ -373,31 +389,22 @@ object AuditEtl {
       "surfer_page_queue.csv", "gsc_queries_28d.csv", "gsc_pages_28d.csv",
       "ga4_pages.csv", "ga4_conversions.csv", "ga4_channels.csv",
       "leadsnap_leads.csv", "leadsnap_calls.csv", "leadsnap_reviews.csv")
+    // GSC/GA4 presence flags (etl.js:437-448) use the same test on the same
+    // files, so they are set here from the one parse. The provenance keys
+    // already exist (AuditModel), so the JSON key order is unchanged.
     for (name <- placeholderNames) {
       zip.get(name) match {
         case None => manifest.set(name, JObj("status" -> str("missing")))
         case Some(buf) =>
           val rows = SmartCsv.parse(buf)
-          if (rows.nonEmpty && !(truthy(rows.head, "status") && truthy(rows.head, "message")))
+          if (rows.nonEmpty && !(truthy(rows.head, "status") && truthy(rows.head, "message"))) {
             manifest.set(name, JObj("status" -> str("full"), "rows" -> int(rows.length)))
-          else
+            if (name.startsWith("gsc_")) prov.set("gsc", str("present"))
+            else if (name.startsWith("ga4_")) prov.set("ga4", str("present"))
+          } else
             manifest.set(name, JObj("status" -> str("placeholder"),
               "note" -> str("access_required_or_empty")))
       }
-    }
-
-    // ---------- GSC/GA4 presence flags (etl.js:437-448)
-    for (name <- Seq("gsc_queries_28d.csv", "gsc_pages_28d.csv");
-         buf <- zip.get(name)) {
-      val rows = SmartCsv.parse(buf)
-      if (rows.nonEmpty && !(truthy(rows.head, "status") && truthy(rows.head, "message")))
-        prov.set("gsc", str("present"))
-    }
-    for (name <- Seq("ga4_pages.csv", "ga4_conversions.csv", "ga4_channels.csv");
-         buf <- zip.get(name)) {
-      val rows = SmartCsv.parse(buf)
-      if (rows.nonEmpty && !(truthy(rows.head, "status") && truthy(rows.head, "message")))
-        prov.set("ga4", str("present"))
     }
 
     Result(out, Scoring.computeScores(out), manifest)

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 
 /** Distributed audit processing: the reference runs ONE zip per actor
   * invocation (/root/reference/src/main.js:27-38); the Spark-native shape
@@ -50,7 +51,7 @@ object AuditPipeline {
       AuditRow(job.path, job.client, job.domain, job.runDate, ok = true, error = "",
         r.normalized.toJson, r.scores.toJson, r.manifest.toJson)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         AuditRow(job.path, job.client, job.domain, job.runDate, ok = false,
           error = e.toString, normalizedJson = "", scoresJson = "", manifestJson = "")
     }

@@ -14,6 +14,12 @@ class BenchAdjudicationSpec extends SparkSpec {
   private val fast: (SparkSession, String) => DataFrame =
     (s, _) => s.range(1000).selectExpr("id", "id * 2 AS twice")
 
+  // A fixed, sleep-dominated cost: between two Bench.run calls the JIT can
+  // halve the timing of a millisecond query, but not of this one, so two
+  // runs of it measure the same within a few percent.
+  private val steady: (SparkSession, String) => DataFrame =
+    (s, d) => { Thread.sleep(200); fast(s, d) }
+
   test("a forced flag embeds an adjudication block with times and jobs") {
     val json = Bench.run(spark, sfDir = "unused",
       queries = Seq("toy_query" -> fast),
@@ -178,13 +184,13 @@ class BenchAdjudicationSpec extends SparkSpec {
     var base = 0.0
     // calibrate: measure once to build a baseline 3x under the real time
     val cal = Bench.run(spark, sfDir = "unused",
-      queries = Seq("toy_query" -> fast, canary -> fast),
+      queries = Seq("toy_query" -> steady, canary -> steady),
       baseline = Map.empty, adjRuns = 2)
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     base = om.readTree(cal).get("queries").get("toy_query").asDouble()
     val canaryBase = om.readTree(cal).get("queries").get(canary).asDouble()
     val json = Bench.run(spark, sfDir = "unused",
-      queries = Seq("toy_query" -> fast, canary -> fast),
+      queries = Seq("toy_query" -> steady, canary -> steady),
       baseline = Map("toy_query" -> base / 3.0, canary -> canaryBase / 3.0),
       floor = 0.0, adjRuns = 2)
     val node = om.readTree(json)

@@ -154,4 +154,22 @@ class AuditPipelineSpec extends SparkSpec {
     assert(byClient("acme") == (37.9, 65.2))
     assert(byClient("beta") == (83.3, 0.0))
   }
+
+  test("a zip bomb fails one archive: ok=false for the archive, partial for an inner zip") {
+    // Zeros deflate about 1000:1: this entry is ~17 KB in the archive and
+    // inflates past the ratio guard, which stops it before it is buffered.
+    val bomb = Fixtures.zip("ahrefs_keywords.csv" ->
+      new Array[Byte]((Zips.RatioFloorBytes + (1 << 20)).toInt))
+    assert(bomb.length * Zips.MaxRatio < Zips.RatioFloorBytes)
+    val row = AuditPipeline.process(AuditPipeline.AuditJob("bomb.zip", "c", "d", "r", bomb))
+    assert(!row.ok)
+    assert(row.error.startsWith("java.util.zip.ZipException") && row.error.contains("limit"))
+
+    val outer = Fixtures.zip("ahrefs_keywords.csv" -> Fixtures.ahrefsKeywords,
+      "ahrefs_site_audit.zip" -> bomb)
+    val nested = AuditPipeline.process(AuditPipeline.AuditJob("outer.zip", "c", "d", "r", outer))
+    assert(nested.ok)
+    assert(nested.manifestJson.contains("\"ahrefs_site_audit.zip\":{\"status\":\"partial\""))
+    assert(nested.manifestJson.contains("inflates"))
+  }
 }

@@ -26,6 +26,32 @@ class JsSemanticsSpec extends AnyFunSuite {
     assert(jsToNum(Some(".")).isNaN)
   }
 
+  /** The regex form jsToNum replaced, kept as the oracle. */
+  private def regexToNum(v: Option[String]): Double = {
+    val s = v.getOrElse("").replaceAll("[^0-9.\\-]", "")
+    if (s.isEmpty) 0.0
+    else if (s.matches("^-?(\\d+\\.?\\d*|\\.\\d+)$")) s.toDouble
+    else Double.NaN
+  }
+
+  private def sameNum(a: Double, b: Double): Boolean =
+    (a.isNaN && b.isNaN) || java.lang.Double.compare(a, b) == 0
+
+  test("jsToNum equals the regex oracle on edge cases and seeded random strings") {
+    val edges = Seq("", "5", "5.", ".5", "-.5", "-5.", "-0", "0", "007", "1-2",
+      "1.2.3", "-", ".", "-.", "--1", "1-", "$1,234.56", "12 apples", "1e5",
+      "+3", " -7 ", "x-1", "-x1", "1.-2", "..1", "1..", "9" * 400, "é1", "\uD83D\uDE001")
+    for (s <- edges)
+      assert(sameNum(jsToNum(Some(s)), regexToNum(Some(s))), s"input '$s'")
+    assert(sameNum(jsToNum(None), regexToNum(None)))
+    val alphabet = "0123456789.-$,e+ x"
+    val rnd = new scala.util.Random(20261019L)
+    for (_ <- 0 until 5000) {
+      val s = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      assert(sameNum(jsToNum(Some(s)), regexToNum(Some(s))), s"input '$s'")
+    }
+  }
+
   test("maxNum: max of finite casts, None when nothing is numeric") {
     val rows = Vector(Map("v" -> "10"), Map("v" -> "abc"), Map("v" -> "30"))
     assert(maxNum(rows, "v").contains(30.0))    // 'abc' -> 0, max still 30

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.immutable.VectorMap
 import Fixtures.{utf8, utf16le, utf16leNoBom}
 
 class SmartCsvSpec extends AnyFunSuite {
@@ -73,5 +74,117 @@ class SmartCsvSpec extends AnyFunSuite {
 
   test("empty input yields no rows") {
     assert(SmartCsv.parse(utf8("")).isEmpty)
+  }
+
+  /** The per-character record split and per-row VectorMap that the
+    * shared-header rows replaced, kept as the oracle. */
+  private def oracleParse(text: String, delimiter: Option[Char]): SmartCsv.Parsed = {
+    val t = if (text.startsWith("\uFEFF")) text.substring(1) else text
+    val delim = delimiter.getOrElse(SmartCsv.guessDelimiter(t))
+    val out = Vector.newBuilder[Vector[String]]
+    var record = Vector.empty[String]
+    val field = new StringBuilder
+    var inQuotes = false
+    var i = 0
+    def endField(): Unit = { record = record :+ field.toString; field.clear() }
+    def endRecord(): Unit = { endField(); out += record; record = Vector.empty }
+    while (i < t.length) {
+      val c = t.charAt(i)
+      if (inQuotes) {
+        if (c == '"') {
+          if (i + 1 < t.length && t.charAt(i + 1) == '"') { field += '"'; i += 1 }
+          else inQuotes = false
+        } else field += c
+      } else c match {
+        case '"' => inQuotes = true
+        case `delim` => endField()
+        case '\r' =>
+          if (i + 1 < t.length && t.charAt(i + 1) == '\n') i += 1
+          endRecord()
+        case '\n' => endRecord()
+        case other => field += other
+      }
+      i += 1
+    }
+    if (field.nonEmpty || record.nonEmpty) endRecord()
+    val records = out.result().filterNot(r => r.length == 1 && r.head.isEmpty)
+    if (records.isEmpty) return SmartCsv.Parsed(Vector.empty, 0)
+    val header = records.head
+    var errors = 0
+    val rows = records.tail.map { fields =>
+      if (fields.length != header.length) errors += 1
+      header.zip(fields).to(VectorMap)
+    }
+    SmartCsv.Parsed(rows, errors)
+  }
+
+  private def assertSameAsOracle(text: String, delimiter: Option[Char]): Unit = {
+    val got = SmartCsv.parseText(text, delimiter)
+    val exp = oracleParse(text, delimiter)
+    val shown = text.replace("\r", "\\r").replace("\n", "\\n")
+    assert(got.errors == exp.errors, s"errors for '$shown'")
+    assert(got.rows == exp.rows, s"rows for '$shown'")
+    got.rows.zip(exp.rows).foreach { case (g, e) =>
+      assert(g.keys.toSeq == e.keys.toSeq, s"key order for '$shown'")
+      assert(g.hashCode == e.hashCode, s"hashCode for '$shown'")
+      assert(g.size == e.size, s"size for '$shown'")
+    }
+  }
+
+  test("shared-header rows equal the per-row VectorMap oracle on seeded random texts") {
+    val names = Seq("a", "b", "c", "a", "Status", "")
+    val pieces = Seq("x", "yz", "1", "2.5", " ", ",", ";", "\t", "\"", "\"\"",
+      "\"q,\"", "m\"id", "\r", "\n", "\r\n", "\n\n", "a", "\uFEFF")
+    val ends = Seq("\n", "\r", "\r\n")
+    val rnd = new scala.util.Random(4242L)
+    def pick[T](xs: Seq[T]): T = xs(rnd.nextInt(xs.length))
+    for (_ <- 0 until 3000) {
+      val delim = pick(Seq(',', '\t', ';'))
+      val header = Seq.fill(1 + rnd.nextInt(5))(pick(names)).mkString(delim.toString)
+      val body = new StringBuilder
+      for (_ <- 0 until rnd.nextInt(8)) {
+        // a row of 0..6 fields, each a few pieces (short and long rows)
+        val fields = Seq.fill(rnd.nextInt(7))(Seq.fill(rnd.nextInt(3))(pick(pieces)).mkString)
+        body ++= fields.mkString(delim.toString)
+        if (rnd.nextInt(5) > 0) body ++= pick(ends)
+      }
+      val text = (if (rnd.nextInt(10) == 0) "\uFEFF" else "") + header + pick(ends) + body
+      assertSameAsOracle(text, Some(delim))
+      assertSameAsOracle(text, None)
+    }
+  }
+
+  test("oracle parity on the hand-picked split cases") {
+    for (text <- Seq("", "\n", "a,b", "a,b\n1,2", "a,b\r1,2\r3", "a,b\r\n1,\"2\r\n3\"\r\n",
+        "a,b\n\"x", "a,b\nx,\"", "a,b\n\"\"", "a,b\nab\"c,d\"e,f", "a,b\n\"a\"\"b\"c,d",
+        "a,a,b\n1,2,3\n1,2\n1\n1,2,3,4", "a,b,a,b\n1,2,3\n", "\n\na,b\n\n1,2\n\n"))
+      assertSameAsOracle(text, Some(','))
+  }
+
+  test("row view: equality, hashCode, contains and updates behave like a Map") {
+    val rows = SmartCsv.parseText("a,b,a,c\n1,2,3,4\n5,6\n7,8,9\n", Some(',')).rows
+    // repeated "a": the last column inside the row wins, at "a"'s first position
+    assert(rows(0) == Map("a" -> "3", "b" -> "2", "c" -> "4"))
+    assert(rows(0).keys.toSeq == Seq("a", "b", "c"))
+    assert(rows(1) == Map("a" -> "5", "b" -> "6"))
+    assert(rows(2) == Map("a" -> "9", "b" -> "8"))
+    assert(Map("a" -> "5", "b" -> "6") == rows(1))
+    assert(rows(0).hashCode == Map("a" -> "3", "b" -> "2", "c" -> "4").hashCode)
+    assert(rows(1).contains("b") && !rows(1).contains("c") && !rows(1).contains("zz"))
+    assert(rows(1).get("c").isEmpty && rows(1).getOrElse("c", "undefined") == "undefined")
+    assert(rows(1).updated("c", "x") == Map("a" -> "5", "b" -> "6", "c" -> "x"))
+    assert(rows(0).removed("b").keys.toSeq == Seq("a", "c"))
+    assert(intercept[NoSuchElementException](rows(1)("c")).getMessage.contains("c"))
+    // wider than Map4: HashMap equality and hashCode
+    val wide = SmartCsv.parseText("a,b,c,d,e,f\n1,2,3,4,5,6\n", Some(',')).rows.head
+    val exp = Map("a" -> "1", "b" -> "2", "c" -> "3", "d" -> "4", "e" -> "5", "f" -> "6")
+    assert(wide == exp && exp == wide && wide.hashCode == exp.hashCode)
+    assert(wide.size == 6 && !wide.isEmpty)
+    // derived maps keep header order past Map4's size, as a VectorMap does
+    assert(wide.filter(_._2 != "3").keys.toSeq == Seq("a", "b", "d", "e", "f"))
+    assert(wide.map { case (k, v) => (k.toUpperCase, v) }.keys.toSeq ==
+      Seq("A", "B", "C", "D", "E", "F"))
+    assert(wide.collect { case (k, v) if v != "1" => (k, v) }.keys.toSeq ==
+      Seq("b", "c", "d", "e", "f"))
   }
 }
