@@ -1,13 +1,37 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.annotation.JsonUnwrapped
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
-/** Benchmark entrypoint (driver contract): times every gate query at the
-  * given scale-factor directory and prints ONE JSON line.
+/** Benchmark and profiling entrypoint. One main, three modes:
   *
-  * Each query is executed TWICE in the same session and the reported
+  *  - no arguments (the bench contract): times every gate query at
+  *    `SPARK_GRAFT_SF_DIR` and prints the full artifact line, the compact
+  *    line and the per-query line, in that order;
+  *  - `profile <q1,q2,…> [runs=5]`: runs the named gates in the GIVEN order,
+  *    `runs` times each, and prints one line with per-run wall times, Spark
+  *    job counts and, for streaming gates, every `StreamingQueryProgress`
+  *    (the per-trigger durationMs / state-operator breakdown). In-order runs
+  *    reproduce a sweep neighborhood (q192–q194 before q195) so in-loop
+  *    interference can be bisected; a single query is an isolated profile;
+  *  - `slope [small large]`: every gate warm at two scale factors in one
+  *    JVM, per-query ratio large/small (see [[FlagRatio]]); the defaults
+  *    are the `sf0.01` directory beside `SPARK_GRAFT_SF_DIR` and
+  *    `SPARK_GRAFT_SF_DIR` itself.
+  *
+  * Every mode holds the machine-wide bench lock ([[locked]]).
+  *
+  * Each sweep query is executed TWICE in the same session and the reported
   * number is the WARM (second) run: a single cold run per JVM carries
   * multi-second JIT/codegen/shuffle-warmup noise that has produced 3-5×
   * round-over-round swings on queries whose code did not change. The cold
@@ -28,7 +52,8 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * Failure policy: a query that throws is reported in a `failed` array and
   * contributes nothing to `queries`/`value` — a crashing query must never
-  * masquerade as a fast one.
+  * masquerade as a fast one. Fatal JVM errors are not a query failure and
+  * end the run.
   *
   * REGRESSION GUARD: when a committed per-query baseline exists
   * (`BENCH_BASELINE_PERQ.json`, a flat {query: warmSeconds} object; path
@@ -49,14 +74,14 @@ import java.util.concurrent.atomic.AtomicInteger
   *
   * AUTO-ADJUDICATION: every `regressed` flag so far (q18 r8, q12 r9,
   * q44 r9, q53 r10) was resolved by the same manual step — an isolated
-  * [[BenchOne]]-style re-profile showing constant job counts and a flat
-  * warm time, i.e. bench-JVM context rather than a plan change. Round 10
-  * skipped the manual step and left its flag open, so the re-profile now
-  * runs automatically: after the sweep, each query whose ratio exceeds the
+  * re-profile showing constant job counts and a flat warm time, i.e.
+  * bench-JVM context rather than a plan change. Round 10 skipped the
+  * manual step and left its flag open, so the re-profile now runs
+  * automatically: after the sweep, each query whose ratio exceeds the
   * factor — REGARDLESS of the absolute floor, so even a floor-exempt
   * sub-second 2×+ entry ships with its own evidence — is profiled
-  * [[AdjudicationRuns]] times in the (now otherwise quiescent) JVM with a
-  * job-count listener, and the artifact embeds the evidence under
+  * [[AdjudicationRuns]] times in the (now otherwise quiescent) JVM with
+  * [[profile]], and the artifact embeds the evidence under
   * `adjudication: {query: {times, jobs, warm, verdict}}`. `warm` is the
   * median of the post-warmup runs; `verdict` is "environmental" when the
   * job count is constant and the re-profiled warm would NOT itself trip
@@ -69,12 +94,28 @@ import java.util.concurrent.atomic.AtomicInteger
   * stdout-tail capture truncates on long lines (round 10 recorded
   * `"parsed": null`), so the complete warm/cold/ratio/adjudication maps
   * must exist as a file the round can commit.
+  *
+  * Every line is a case class of the artifact model below, serialized by
+  * Jackson: field order is constructor order, `None` is `null`.
   */
 object Bench {
+
+  type Query = (SparkSession, String) => DataFrame
 
   val RegressionFactor = 2.0
   val AbsFloorSeconds = 0.75
   val AdjudicationRuns = 8
+
+  /** Slope flag: a large/small ratio above 15× AND a large-sf time above
+    * [[MinFlagSeconds]]. sf0.01→sf0.1 is 10× on the TPC-H-ish tables
+    * (documents/embeddings scale 10×/4× — only sf0.1 exercises their
+    * n-derived index geometry), so a well-behaved query's slope is ≤~10
+    * plus constant overhead; sub-half-second queries are timer noise, not
+    * scaling evidence. The single-sf bench can say a query is fast at sf0.1
+    * and still hide superlinearity; the slope is the strongest local proxy
+    * for "would this survive 100 TB" the container can measure. */
+  val FlagRatio = 15.0
+  val MinFlagSeconds = 0.5
 
   /** ERA CANARIES: stable, trivial, plan-pinned queries whose blessed-vs-
     * measured ratio estimates the MACHINE ERA of the run (container CPU
@@ -91,6 +132,71 @@ object Bench {
   val CanaryQueries: Seq[String] = Seq(
     "q09_topk", "q12_cond_buckets", "q19_null_handling",
     "q26_contains", "q27_first_match")
+
+  val Json: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  sealed trait Artifact { def toJson: String = Json.writeValueAsString(this) }
+
+  /** Cross-process contamination stamp of a locked run (see [[locked]]). */
+  final case class Stamp(other_graft_jvms: Int, lock_acquired: Boolean,
+                         lock_wait_s: Double)
+
+  final case class Adjudication(times: Seq[Double], jobs: Seq[Int],
+                                warm: Double, verdict: String)
+
+  /** One sweep: the full artifact minus the [[Stamp]]. */
+  final case class Sweep(
+      metric: String = "total", value: Double, unit: String = "sec",
+      run: String = "warm", exec: String = "noop_sink",
+      era: Double, era_raw: Double, era_warn: Option[String],
+      queries: ListMap[String, Double], cold: ListMap[String, Double],
+      ratio: ListMap[String, Double], ratio_norm: ListMap[String, Double],
+      regressed: Seq[String], adjudication: ListMap[String, Adjudication],
+      unbaselined: Seq[String], materializes: Seq[String],
+      failed: Seq[String], sf: String) extends Artifact
+
+  /** The full artifact line and `BENCH_LOCAL_LAST*.json`. */
+  final case class Full(@JsonUnwrapped stamp: Stamp,
+                        @JsonUnwrapped sweep: Sweep) extends Artifact
+
+  /** See [[compactOf]]. */
+  final case class Compact(
+      metric: String, value: Double, unit: String, run: String, exec: String,
+      compact: Boolean = true, n_queries: Int,
+      era: Double, era_raw: Double, era_warn: Option[String],
+      regressed: Seq[String], unbaselined: Seq[String], failed: Seq[String],
+      queries: ListMap[String, Double],
+      queries_note: String = "canary sample; full per-query artifact on the " +
+        "preceding stdout line and in SPARK_GRAFT_BENCH_OUT",
+      sf: String) extends Artifact
+
+  /** See [[perqOf]]. */
+  final case class Perq(
+      metric: String, value: Double, unit: String, run: String, exec: String,
+      perq: Boolean = true, n_queries: Int,
+      era: Double, era_raw: Double, era_warn: Option[String],
+      regressed: Seq[String], unbaselined: Seq[String], failed: Seq[String],
+      queries: ListMap[String, Double], sf: String) extends Artifact
+
+  /** The `slope` line and `BENCH_SLOPE_*.json`. */
+  final case class Slope(
+      metric: String = "slope", unit: String = "ratio",
+      small: String, large: String, @JsonUnwrapped stamp: Stamp,
+      flag_rule: String = s"ratio>$FlagRatio and large>${MinFlagSeconds}s",
+      warm_small: ListMap[String, Double], warm_large: ListMap[String, Double],
+      slope: ListMap[String, Double], flagged: Seq[String]) extends Artifact
+
+  /** Per-run evidence of one query: wall seconds, Spark jobs started, and
+    * the progress events of every streaming query the run drove. */
+  final case class Profile(times: Seq[Double], jobs: Seq[Int],
+                           progress: Seq[Seq[JsonNode]])
+
+  /** The `profile` line. */
+  final case class Profiles(
+      metric: String = "profile", sf: String, @JsonUnwrapped stamp: Stamp,
+      runs: Int, queries: ListMap[String, Profile]) extends Artifact
+
+  private def r3(x: Double): Double = math.rint(x * 1000) / 1000
 
   /** UNCLAMPED median blessed-vs-measured ratio over the canaries present
     * in both maps; 1.0 when no canary has a baseline (spec runs, first
@@ -116,7 +222,7 @@ object Bench {
     * declares, machine-checked: a raw era at/past a clamp bound, or an era
     * outside [0.8, 1.3], demands an explicit `machine-era:` adjudication
     * entry in the notes (BaselineNotesSpec enforces the entry for the
-    * committed loop artifact). Returns null (JSON) when the era is
+    * committed loop artifact). None (JSON null) when the era is
     * unremarkable. */
   val EraNotesBand: (Double, Double) = (0.8, 1.3)
   def eraWarnOf(eraRaw: Double, hasBaseline: Boolean): Option[String] =
@@ -126,46 +232,63 @@ object Bench {
       Some("era_outside_notes_band")
     else None
 
-  /** Flat {name: seconds} baseline, absent → empty. Jackson is already on
-    * Spark's classpath; no extra dependency. */
+  /** Flat {name: seconds} baseline, absent → empty. */
   def loadBaseline(path: String): Map[String, Double] = {
     val f = new java.io.File(path)
     if (!f.exists()) Map.empty
-    else {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = om.readTree(f)
-      import scala.jdk.CollectionConverters._
-      node.fields().asScala
-        .filter(_.getValue.isNumber)
-        .map(e => e.getKey -> e.getValue.asDouble()).toMap
-    }
+    else Json.readTree(f).fields().asScala
+      .filter(_.getValue.isNumber)
+      .map(e => e.getKey -> e.getValue.asDouble()).toMap
   }
 
-  /** Runs `exec` `runs` times, recording per-run wall seconds and Spark
-    * job counts (listener-based; the async listener bus is given a moment
-    * to drain before each count is read). Shared by [[BenchOne]] (manual
-    * isolated profiling) and the auto-adjudication pass. */
-  def profile(spark: SparkSession, exec: () => Unit, runs: Int)
-      : (Seq[Double], Seq[Int]) = {
+  /** Wall seconds of one noop-sink execution of `df` (construction
+    * included: gates may run eager jobs before they return). With `gc`, a
+    * full collection runs first, OUTSIDE the timed window: ~400 executions
+    * in one JVM pile up unreferenced broadcast/shuffle/RDD/localCheckpoint
+    * blocks faster than the async ContextCleaner retires them (it only
+    * acts on GC'd references), and the accumulated churn lands on
+    * whichever query runs next — r15's q195 measured 3.15 s warm in-loop
+    * vs 0.30 s once the sweep drained, and the r11 XL slope probe read q50
+    * at 86 s vs 3.6 s in an isolated JVM. The collection costs ~100 ms. */
+  def time(df: => DataFrame, gc: Boolean = false): Double = {
+    if (gc) System.gc()
+    val t0 = System.nanoTime()
+    df.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Runs `fn` `runs` times (each after a GC), recording per-run wall
+    * seconds, Spark job counts and streaming progress events. Both
+    * listener buses are async; each run gives them a moment to drain
+    * before its counts are read. */
+  def profile(spark: SparkSession, sfDir: String, fn: Query, runs: Int): Profile = {
     val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
+    val progress = new ConcurrentLinkedQueue[JsonNode]()
+    val jobListener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    spark.sparkContext.addSparkListener(listener)
+    val streamListener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(Json.readTree(e.progress.json))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.streams.addListener(streamListener)
     try {
-      val times = scala.collection.mutable.ListBuffer[Double]()
-      val jobCounts = scala.collection.mutable.ListBuffer[Int]()
-      (1 to runs).foreach { _ =>
+      val perRun = (1 to runs).map { _ =>
         val j0 = jobs.get()
-        val t0 = System.nanoTime()
-        exec()
-        times += (System.nanoTime() - t0) / 1e9
-        Thread.sleep(200) // listener bus is async; let job-starts drain
-        jobCounts += jobs.get() - j0
+        progress.clear()
+        val t = time(fn(spark, sfDir), gc = true)
+        Thread.sleep(200)
+        (t, jobs.get() - j0, progress.asScala.toSeq)
       }
-      (times.toSeq, jobCounts.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
+      Profile(perRun.map(_._1), perRun.map(_._2), perRun.map(_._3))
+    } finally {
+      spark.streams.removeListener(streamListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
   }
 
   /** Median of the post-warmup portion of a profile (first quarter of the
@@ -184,66 +307,44 @@ object Bench {
     val warm = profiledWarm(times)
     val planStable = jobCounts.distinct.length == 1
     val underGuard = warm <= factor * baseline || warm - baseline <= floor
-    (math.rint(warm * 1000) / 1000,
-      if (planStable && underGuard) "environmental" else "confirmed")
+    (r3(warm), if (planStable && underGuard) "environmental" else "confirmed")
   }
 
   /** The full bench sweep as a pure-ish function of its inputs so the
     * adjudication path is spec-testable with a forced flag (tiny baseline
-    * + zeroed floor) on a restricted query set. Returns the one-line JSON
-    * artifact. */
+    * + zeroed floor) on a restricted query set. */
   def run(spark: SparkSession, sfDir: String,
-          queries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
+          queries: Seq[(String, Query)],
           baseline: Map[String, Double],
           factor: Double = RegressionFactor,
           floor: Double = AbsFloorSeconds,
-          adjRuns: Int = AdjudicationRuns): String = {
+          adjRuns: Int = AdjudicationRuns): Sweep = {
     val warm = scala.collection.mutable.LinkedHashMap[String, Double]()
     val cold = scala.collection.mutable.LinkedHashMap[String, Double]()
     val failed = scala.collection.mutable.ListBuffer[String]()
     val mats = scala.collection.mutable.ListBuffer[String]()
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     queries.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val matsBefore = graft.operators.MaterializeOnce.relationCount
-        // Quiesce before each query (the BenchSlope mitigation, r11):
-        // ~400 executions in one JVM pile up unreferenced broadcast/
-        // shuffle/RDD blocks faster than the async ContextCleaner retires
-        // them (it only acts on GC'd references), and the accumulated
-        // churn lands on whichever query runs next — r15's q195 measured
-        // 3.15 s warm in-loop vs 0.30 s in the same JVM once the sweep
-        // drained, and r16's probe flagged q94 at 2.97× with an
-        // adjudicated 0.64 s. The GC runs OUTSIDE the timed window; cold
-        // absorbs the cleaner catch-up.
-        System.gc()
-        cold(name) = once(fn)
+        // Quiesce before each query; cold absorbs the cleaner catch-up.
+        cold(name) = time(fn(spark, sfDir), gc = true)
         if (graft.operators.MaterializeOnce.relationCount > matsBefore)
           mats += name
-        warm(name) = once(fn)
-      } catch { case e: Throwable =>
+        warm(name) = time(fn(spark, sfDir))
+      } catch { case NonFatal(e) =>
         failed += name
         cold.remove(name)
         System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
     }
-    def obj(m: scala.collection.Map[String, Double]): String =
-      m.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
-    def arr(xs: Seq[String]): String =
-      xs.map(n => s"\"$n\"").mkString("[", ",", "]")
-    def numArr[T](xs: Seq[T]): String = xs.mkString("[", ",", "]")
-    val total = warm.values.sum
-    val ratio = scala.collection.immutable.ListMap(warm.toSeq.flatMap {
+    val ratio = ListMap(warm.toSeq.flatMap {
       case (q, t) => baseline.get(q).map(b => q -> math.rint(t / b * 100) / 100)
     }: _*)
     // Era normalization (see CanaryQueries): flags fire on the CANARY-
     // NORMALIZED ratio so a slow machine era produces one `era` number
     // instead of a flag storm that trains readers to ignore `regressed`.
     val era = eraOf(warm, baseline)
-    val ratioNorm = scala.collection.immutable.ListMap(warm.toSeq.flatMap {
+    val ratioNorm = ListMap(warm.toSeq.flatMap {
       case (q, t) =>
         baseline.get(q).map(b => q -> math.rint(t / (b * era) * 100) / 100)
     }: _*)
@@ -265,42 +366,36 @@ object Bench {
     // compares against the era-scaled baseline (the era is machine-wide,
     // not in-JVM, so it applies to the re-profile too).
     val byName = queries.toMap
-    val adjudication = overRatio.map { q =>
-      val (times, jobCounts) = profile(spark, () => { once(byName(q)); () }, adjRuns)
-      val (w, verdict) = adjudicate(times, jobCounts, baseline(q) * era, factor, floor)
-      s""""$q":{"times":${numArr(times.map(t => math.rint(t * 1000) / 1000))},"jobs":${numArr(jobCounts)},"warm":$w,"verdict":"$verdict"}"""
-    }.mkString("{", ",", "}")
-    val eraR = math.rint(era * 1000) / 1000
+    val adjudication = ListMap(overRatio.map { q =>
+      val p = profile(spark, sfDir, byName(q), adjRuns)
+      val (w, verdict) = adjudicate(p.times, p.jobs, baseline(q) * era, factor, floor)
+      q -> Adjudication(p.times.map(r3), p.jobs, w, verdict)
+    }: _*)
     // Warn on the UNROUNDED ratio — a raw era just outside the notes band
     // (e.g. 0.7996) must not round back inside and mute the alarm; only
     // the artifact field is rounded for display.
-    val eraRawFull = eraRawOf(warm, baseline)
-    val eraRaw = math.rint(eraRawFull * 1000) / 1000
-    val eraWarn = eraWarnOf(eraRawFull, baseline.nonEmpty)
-      .fold("null")(w => s""""$w"""")
-    s"""{"metric":"total","value":$total,"unit":"sec","run":"warm","exec":"noop_sink","era":$eraR,"era_raw":$eraRaw,"era_warn":$eraWarn,"queries":${obj(warm)},"cold":${obj(cold)},"ratio":${obj(ratio)},"ratio_norm":${obj(ratioNorm)},"regressed":${arr(regressed)},"adjudication":$adjudication,"unbaselined":${arr(unbaselined)},"materializes":${arr(mats.toSeq)},"failed":${arr(failed.toSeq)},"sf":"$sfDir"}"""
+    val eraRaw = eraRawOf(warm, baseline)
+    Sweep(value = warm.values.sum, era = r3(era), era_raw = r3(eraRaw),
+      era_warn = eraWarnOf(eraRaw, baseline.nonEmpty),
+      queries = ListMap.from(warm), cold = ListMap.from(cold),
+      ratio = ratio, ratio_norm = ratioNorm, regressed = regressed,
+      adjudication = adjudication, unbaselined = unbaselined,
+      materializes = mats.toSeq, failed = failed.toSeq, sf = sfDir)
   }
 
-  /** Compact (< 2 KB) summary of a full run artifact: the aggregate, the
-    * era fields, every flag array, and the CANARY warm times as the
-    * `queries` sample — no 200-entry per-query maps. Printed LAST by
-    * [[main]] so a consumer that keeps only a bounded tail of stdout (the
-    * round driver keeps 2000 chars — three rounds of its bench artifacts
-    * carried `parsed: null` because the 25 KB full line never fit) still
-    * captures one complete, parseable JSON object. The full artifact is
-    * the preceding stdout line and the SPARK_GRAFT_BENCH_OUT file. */
-  def compactOf(json: String, nQueries: Int): String = {
-    def f(name: String): String =
-      s""""$name":(\\[[^\\]]*\\]|"[^"]*"|[-0-9.E]+|null)""".r
-        .findFirstMatchIn(json).map(_.group(1)).getOrElse("null")
-    // First occurrence of a query name in the artifact is its WARM time
-    // (the `queries` object precedes cold/ratio/ratio_norm).
-    val canaries = CanaryQueries.flatMap { q =>
-      s""""$q":([-0-9.E]+)""".r.findFirstMatchIn(json)
-        .map(m => s""""$q":${m.group(1)}""")
-    }.mkString("{", ",", "}")
-    s"""{"metric":"total","value":${f("value")},"unit":"sec","run":"warm","exec":"noop_sink","compact":true,"n_queries":$nQueries,"era":${f("era")},"era_raw":${f("era_raw")},"era_warn":${f("era_warn")},"regressed":${f("regressed")},"unbaselined":${f("unbaselined")},"failed":${f("failed")},"queries":$canaries,"queries_note":"canary sample; full per-query artifact on the preceding stdout line and in SPARK_GRAFT_BENCH_OUT","sf":${f("sf")}}"""
-  }
+  /** Compact (< 2 KB) summary of a sweep: the aggregate, the era fields,
+    * every flag array, and the CANARY warm times as the `queries` sample —
+    * no 200-entry per-query maps. Printed after the full line so a
+    * consumer that keeps only a bounded tail of stdout (one keeps 2000
+    * chars — three rounds of its bench artifacts carried
+    * `parsed: null` because the 25 KB full line never fit) still captures
+    * one complete, parseable JSON object. */
+  def compactOf(s: Sweep, nQueries: Int): Compact =
+    Compact(s.metric, s.value, s.unit, s.run, s.exec, n_queries = nQueries,
+      era = s.era, era_raw = s.era_raw, era_warn = s.era_warn,
+      regressed = s.regressed, unbaselined = s.unbaselined, failed = s.failed,
+      queries = ListMap(CanaryQueries.flatMap(q => s.queries.get(q).map(q -> _)): _*),
+      sf = s.sf)
 
   /** Per-query summary (~6 KB for 214 gates): the driver contract fields
     * plus the FULL warm `queries` map rounded to 3 decimals, printed as the
@@ -308,82 +403,121 @@ object Bench {
     * per-query round-over-round comparison (PERF `n_common` / geomean)
     * parses bench stdout, and for two rounds it saw either nothing (the
     * 25 KB full artifact exceeds its line handling) or only the 5-canary
-    * sample of [[compactOf]] — so every per-query claim had to be
-    * re-derived from committed artifacts by hand. This line carries the
-    * complete map while staying an order of magnitude smaller than the
-    * full artifact: the bulky evidence objects (cold/ratio/ratio_norm/
-    * adjudication) stay on the full-artifact line and in
-    * SPARK_GRAFT_BENCH_OUT. The <2 KB [[compactOf]] line immediately
-    * precedes it as the fallback for strictly-bounded-tail consumers.
-    * Purely additive output — the timed loop and the numbers on every
-    * line are unchanged. */
-  def perqOf(json: String, nQueries: Int): String = {
-    def f(name: String): String =
-      s""""$name":(\\[[^\\]]*\\]|"[^"]*"|[-0-9.E]+|null)""".r
-        .findFirstMatchIn(json).map(_.group(1)).getOrElse("null")
-    // First "queries" object in the artifact is the WARM map (cold/ratio
-    // maps follow it).
-    val body = """"queries":\{([^{}]*)\}""".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse("")
-    val entries = """"([^"]+)":([-0-9.E]+)""".r.findAllMatchIn(body).map { m =>
-      s""""${m.group(1)}":${math.rint(m.group(2).toDouble * 1000) / 1000}"""
-    }.mkString(",")
-    s"""{"metric":"total","value":${f("value")},"unit":"sec","run":"warm","exec":"noop_sink","perq":true,"n_queries":$nQueries,"era":${f("era")},"era_raw":${f("era_raw")},"era_warn":${f("era_warn")},"regressed":${f("regressed")},"unbaselined":${f("unbaselined")},"failed":${f("failed")},"queries":{$entries},"sf":${f("sf")}}"""
+    * sample of [[compactOf]]. The bulky evidence objects (cold/ratio/
+    * ratio_norm/adjudication) stay on the full-artifact line and in
+    * SPARK_GRAFT_BENCH_OUT. */
+  def perqOf(s: Sweep, nQueries: Int): Perq =
+    Perq(s.metric, s.value, s.unit, s.run, s.exec, n_queries = nQueries,
+      era = s.era, era_raw = s.era_raw, era_warn = s.era_warn,
+      regressed = s.regressed, unbaselined = s.unbaselined, failed = s.failed,
+      queries = s.queries.map { case (q, t) => q -> r3(t) }, sf = s.sf)
+
+  /** Warm seconds of every gate at `sfDir`, in name order, after an
+    * unreported cold run; failures are logged and left out. */
+  def warmTimes(spark: SparkSession, sfDir: String): ListMap[String, Double] =
+    ListMap(SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try {
+        time(fn(spark, sfDir), gc = true)
+        Some(name -> time(fn(spark, sfDir)))
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[slope] $name FAILED at $sfDir: ${e.getMessage}")
+        None
+      }
+    }: _*)
+
+  /** The slope line over the warm maps of [[warmTimes]] at two sfs. */
+  def slopeOf(small: String, large: String, stamp: Stamp,
+              ts: ListMap[String, Double], tl: ListMap[String, Double]): Slope = {
+    val ratios = ListMap(ts.keySet.intersect(tl.keySet).toSeq.sorted.map { q =>
+      q -> math.rint(tl(q) / math.max(ts(q), 1e-3) * 100) / 100
+    }: _*)
+    Slope(small = small, large = large, stamp = stamp,
+      warm_small = ts.map { case (q, t) => q -> r3(t) },
+      warm_large = tl.map { case (q, t) => q -> r3(t) },
+      slope = ratios,
+      flagged = ratios.collect {
+        case (q, r) if r > FlagRatio && tl(q) > MinFlagSeconds => q
+      }.toSeq)
+  }
+
+  /** Machine-wide bench serialization + contamination stamp around `body`
+    * (the r18 refresh/bench overlap produced 4 environmental flags
+    * that had to be adjudicated forensically): hold /tmp/graft_bench.lock
+    * for the whole timed run; if another bench holds it, WAIT (up to 45
+    * min) rather than contaminate both. `other_graft_jvms` is the larger of
+    * the peer counts at start and end — a peer that appeared or
+    * disappeared mid-run still counts as contamination. */
+  def locked[T](body: => T): (Stamp, T) = {
+    RunCoord.registerJvm()
+    val (held, waited, (othersAtStart, out)) =
+      RunCoord.withBenchLock(maxWaitS = 45 * 60)((RunCoord.otherGraftJvms(), body))
+    (Stamp(math.max(othersAtStart, RunCoord.otherGraftJvms()), held,
+      math.rint(waited * 10) / 10), out)
+  }
+
+  /** A local session, warmed with a JVM/codegen job so the first timed
+    * query is not charged session startup (the warmup deliberately does
+    * NOT touch the corpus: I/O stays timed). */
+  def withSession[T](cpus: String)(body: SparkSession => T): T = {
+    val spark = GraftSession.local(cpus)
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    val out = body(spark)
+    spark.stop()
+    // Once streaming gates have run, the StateStore maintenance thread
+    // logs a 10-line "SparkEnv not active" stack after the session stops:
+    // ~800 chars of noise in a consumer's bounded 2000-char stdout tail.
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+    out
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    args.toList match {
+      case Nil => sweepMain(sfDir, cpus)
+      case "profile" :: names :: rest if rest.length <= 1 =>
+        val runs = rest.headOption.fold(5)(_.toInt)
+        val qs = names.split(',').map(_.trim).filter(_.nonEmpty).map(n =>
+          n -> SparkEntry.queries.getOrElse(n, sys.error(s"unknown query $n")))
+        val (stamp, ps) = locked(withSession(cpus) { spark =>
+          qs.map { case (n, fn) =>
+            val p = profile(spark, sfDir, fn, runs)
+            n -> p.copy(times = p.times.map(r3))
+          }
+        })
+        println(Profiles(sf = sfDir, stamp = stamp, runs = runs,
+          queries = ListMap(ps.toSeq: _*)).toJson)
+      case "slope" :: rest if rest.length == 0 || rest.length == 2 =>
+        val List(small, large) = if (rest.nonEmpty) rest
+          else List(java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString, sfDir)
+        val (stamp, (ts, tl)) = locked(withSession(cpus) { spark =>
+          (warmTimes(spark, small), warmTimes(spark, large))
+        })
+        println(slopeOf(small, large, stamp, ts, tl).toJson)
+      case _ => sys.error("usage: Bench | Bench profile <q1,q2,…> [runs] | Bench slope [small large]")
+    }
+  }
+
+  private def sweepMain(sfDir: String, cpus: String): Unit = {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL_LAST.json")
-    RunCoord.registerJvm()
-    // Machine-wide bench serialization + contamination stamp (the r18
-    // refresh/driver-bench overlap produced 4 environmental flags that
-    // had to be adjudicated forensically): hold /tmp/graft_bench.lock for
-    // the whole timed sweep; if another bench holds it, WAIT (up to 45
-    // min) rather than contaminate both. other_graft_jvms counts any
-    // remaining concurrent graft work at sweep start — nonzero means the
-    // run's timings carry contention no matter what the lock serialized.
-    val (lock, waited) = RunCoord.acquireBenchLock(maxWaitS = 45 * 60)
-    val othersAtStart = RunCoord.otherGraftJvms()
-    val json0 = try {
-      val spark = GraftSession.local(cpus)
-      // JVM/codegen warmup so the first timed query is not charged session
-      // startup; deliberately does NOT touch the corpus (I/O stays timed).
-      spark.range(1000000).selectExpr("sum(id)").collect()
+    val (stamp, sweep) = locked(withSession(cpus) { spark =>
       val baseline = loadBaseline(sys.env.getOrElse(
         "SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE_PERQ.json"))
-      val j = run(spark, sfDir, SparkEntry.queries.toSeq, baseline)
-      spark.stop()
-      j
-    } finally RunCoord.releaseBenchLock(lock)
-    // max(start, end): a peer that appeared or disappeared mid-sweep
-    // still counts as contamination.
-    val json = "{" +
-      s""""other_graft_jvms":${math.max(othersAtStart, RunCoord.otherGraftJvms())},""" +
-      s""""lock_acquired":${lock != null},""" +
-      s""""lock_wait_s":${math.rint(waited * 10) / 10},""" +
-      json0.drop(1)
-    // The post-stop StateStore maintenance thread logs a 10-line
-    // IllegalStateException stack ("SparkEnv not active") into the sbt
-    // session after the streaming gates have run — ~800 chars of noise
-    // inside the driver's bounded 2000-char stdout tail (it crowded the
-    // r19 tail). Stop the maintenance task while SparkEnv is still up.
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      run(spark, sfDir, SparkEntry.queries.toSeq, baseline)
+    })
+    val json = Full(stamp, sweep).toJson
     println(json)
-    println(compactOf(json, SparkEntry.queries.size))
-    // FINAL line: the full per-query warm map (r19 verdict item 1) — the
-    // line the round driver parses for its per-query comparison.
-    println(perqOf(json, SparkEntry.queries.size))
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes("UTF-8"))
+    println(compactOf(sweep, SparkEntry.queries.size).toJson)
+    // FINAL line: the full per-query warm map, which per-query
+    // round-over-round comparisons parse.
+    println(perqOf(sweep, SparkEntry.queries.size).toJson)
     // The driver overwrites outPath on its own runs (its low-core scaling
     // sweep lands LAST, so the 32-cpu per-query artifact survived nowhere
     // in r19). Keep a per-core-count copy alongside it.
     val cpuPath =
-      if (outPath.endsWith(".json"))
-        outPath.stripSuffix(".json") + s"_c$cpus.json"
+      if (outPath.endsWith(".json")) outPath.stripSuffix(".json") + s"_c$cpus.json"
       else outPath + s"_c$cpus"
-    java.nio.file.Files.write(java.nio.file.Paths.get(cpuPath),
-      (json + "\n").getBytes("UTF-8"))
+    Seq(outPath, cpuPath).foreach(p => java.nio.file.Files.write(
+      java.nio.file.Paths.get(p), (json + "\n").getBytes("UTF-8")))
   }
 }

@@ -61,35 +61,26 @@ object RunCoord {
     } catch { case _: Exception => 0 }
   }
 
-  /** Blocking-with-timeout acquisition of the machine-wide bench lock.
-    * Returns (lock handle or null, seconds waited). The caller keeps the
-    * returned objects alive for the duration of the timed run and calls
-    * [[releaseBenchLock]] after; a null handle means the wait timed out
-    * and the run proceeded unserialized (stamp it in the artifact). */
-  def acquireBenchLock(maxWaitS: Int): (AutoCloseable, Double) = {
+  /** Runs `body` holding the machine-wide bench lock, waiting at most
+    * `maxWaitS` seconds for it; returns (lock held, seconds waited,
+    * result). After a timed-out wait (or any failure to lock) `body` runs
+    * unserialized — the caller stamps that in its artifact. Closing the
+    * channel releases the lock. */
+  def withBenchLock[T](maxWaitS: Int)(body: => T): (Boolean, Double, T) = {
     val t0 = System.nanoTime()
-    try {
-      val ch = java.nio.channels.FileChannel.open(
+    def waited = (System.nanoTime() - t0) / 1e9
+    val ch = try Some(java.nio.channels.FileChannel.open(
         markerDir.resolve("graft_bench.lock"),
         java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      var lock: java.nio.channels.FileLock = null
-      while (lock == null && (System.nanoTime() - t0) / 1e9 < maxWaitS) {
-        lock = ch.tryLock()
-        if (lock == null) Thread.sleep(2000)
-      }
-      val waited = (System.nanoTime() - t0) / 1e9
-      if (lock == null) { ch.close(); (null, waited) }
-      else {
-        val l = lock
-        val closer: AutoCloseable = () => { try l.release() finally ch.close() }
-        (closer, waited)
-      }
-    } catch {
-      case _: Exception => (null, (System.nanoTime() - t0) / 1e9)
-    }
+        java.nio.file.StandardOpenOption.WRITE))
+      catch { case _: Exception => None }
+    try {
+      val held = try ch.exists { c =>
+        var lock = c.tryLock()
+        while (lock == null && waited < maxWaitS) { Thread.sleep(2000); lock = c.tryLock() }
+        lock != null
+      } catch { case _: Exception => false }
+      (held, waited, body) // evaluated in order: `waited` excludes `body`
+    } finally ch.foreach(c => try c.close() catch { case _: Exception => () })
   }
-
-  def releaseBenchLock(handle: AutoCloseable): Unit =
-    if (handle != null) { try handle.close() catch { case _: Exception => () } }
 }

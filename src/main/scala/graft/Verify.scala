@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -32,25 +33,15 @@ object Verify {
         .foreach { case (name, fn) =>
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$out/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // Jackson escapes backslash, quote and every control char — a tab or
+    // CR in hand-written SQL would otherwise make the oracle compare's
+    // json.load fail and silently zero the round's correctness.
+    val json = Bench.Json.writeValueAsString(SparkEntry.oracleSql)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (sweeps.length > 1) sweeps.foreach { sfDir =>
       Files.writeString(Paths.get(

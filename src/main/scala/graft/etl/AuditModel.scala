@@ -14,30 +14,63 @@ import scala.collection.mutable
   * stage wrote.
   */
 object J {
-  sealed trait V { def toJson: String }
-  case object JNull extends V { def toJson = "null" }
-  final case class JBool(b: Boolean) extends V { def toJson = b.toString }
+  sealed trait V {
+    /** Appends this value's JSON to `sb`; containers recurse into the same
+      * builder, so a document serializes without intermediate strings. */
+    def writeTo(sb: java.lang.StringBuilder): Unit
+    def toJson: String = {
+      val sb = new java.lang.StringBuilder
+      writeTo(sb)
+      sb.toString
+    }
+  }
+  case object JNull extends V {
+    def writeTo(sb: java.lang.StringBuilder): Unit = sb.append("null")
+  }
+  final case class JBool(b: Boolean) extends V {
+    def writeTo(sb: java.lang.StringBuilder): Unit = sb.append(b)
+  }
   final case class JStr(s: String) extends V {
-    def toJson = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    def writeTo(sb: java.lang.StringBuilder): Unit = JStr.quote(s, sb)
+  }
+  object JStr {
+    private val Hex = "0123456789abcdef"
+    /** `s` as a JSON string literal: quote, backslash and the controls
+      * below 0x20 escaped (`\n`, `\r`, `\t` short, the rest `\u00xx`),
+      * everything else, lone surrogates included, copied as is. */
+    def quote(s: String, sb: java.lang.StringBuilder): Unit = {
+      sb.append('"')
+      var i = 0
+      while (i < s.length) {
+        s.charAt(i) match {
+          case '"' => sb.append("\\\"")
+          case '\\' => sb.append("\\\\")
+          case '\n' => sb.append("\\n")
+          case '\r' => sb.append("\\r")
+          case '\t' => sb.append("\\t")
+          case c if c < ' ' => sb.append("\\u00").append(Hex(c >> 4)).append(Hex(c & 0xf))
+          case c => sb.append(c)
+        }
+        i += 1
+      }
+      sb.append('"')
+    }
   }
   /** JS number: integral doubles print without a decimal point
     * (`JSON.stringify(24.0)` is `"24"`), NaN/Infinity serialize as null. */
   final case class JNum(d: Double) extends V {
-    def toJson =
+    def writeTo(sb: java.lang.StringBuilder): Unit = sb.append(
       if (d.isNaN || d.isInfinite) "null"
       else if (d == math.floor(d) && math.abs(d) < 1e15) d.toLong.toString
-      else d.toString
+      else d.toString)
   }
   final case class JArr(items: Seq[V]) extends V {
-    def toJson = items.map(_.toJson).mkString("[", ",", "]")
+    def writeTo(sb: java.lang.StringBuilder): Unit = {
+      sb.append('[')
+      var sep = ""
+      items.foreach { v => sb.append(sep); sep = ","; v.writeTo(sb) }
+      sb.append(']')
+    }
   }
   /** Insertion-ordered object, mutable in place like the reference's doc. */
   final class JObj extends V {
@@ -49,8 +82,16 @@ object J {
     def num(key: String): Option[Double] = fields(key) match {
       case JNum(d) => Some(d); case _ => None
     }
-    def toJson = fields.map { case (k, v) => JStr(k).toJson + ":" + v.toJson }
-      .mkString("{", ",", "}")
+    def writeTo(sb: java.lang.StringBuilder): Unit = {
+      sb.append('{')
+      var sep = ""
+      fields.foreach { case (k, v) =>
+        sb.append(sep); sep = ","
+        JStr.quote(k, sb)
+        v.writeTo(sb.append(':'))
+      }
+      sb.append('}')
+    }
   }
   object JObj {
     def apply(kvs: (String, V)*): JObj = {

@@ -11,14 +11,15 @@ package graft.etl
   */
 object PickCol {
 
+  private val Whitespace = java.util.regex.Pattern.compile("\\s+")
+
   def norm(s: String): String =
-    Option(s).getOrElse("")
-      .replace('\u00A0', ' ')
-      .replaceAll("\\s+", " ")
+    Whitespace.matcher(Option(s).getOrElse("").replace('\u00A0', ' '))
+      .replaceAll(" ")
       .trim
       .toLowerCase
 
-  def normNoSpace(s: String): String = norm(s).replaceAll("\\s+", "")
+  def normNoSpace(s: String): String = Whitespace.matcher(norm(s)).replaceAll("")
 
   /** Returns the ORIGINAL header name, as the reference does (rows are then
     * indexed by the original key). */

@@ -22,7 +22,7 @@ object StreamingQueries extends QueryPack {
   /** Per-JVM disambiguator baked into every on-disk stream dir name
     * (slices, live staging, file sinks): `mbRun` is only unique WITHIN a
     * JVM, and the shared `java.io.tmpdir` is not exclusive — a concurrent
-    * graft process (a driver Bench/BenchSlope run alongside `sbt test`)
+    * graft process (a Bench sweep or slope run alongside `sbt test`)
     * would otherwise collide on `graft_stream_1` and trip the specs'
     * tmp-hygiene snapshots. The specs filter on this prefix too, so they
     * only ever assert over dirs THIS JVM created. */

@@ -74,19 +74,18 @@ class NioCheckpointFileManager(root: Path, conf: Configuration)
         super.close()
         // rename(2) always replaces an existing target, so the
         // no-overwrite contract (HDFSMetadataLog's concurrent-writer
-        // detection) needs the explicit existence check.
-        if (!overwriteIfPossible && Files.exists(dst)) {
-          Files.deleteIfExists(tmp)
-          throw new FileAlreadyExistsException(
-            s"Failed to rename temp file $tmp to $dst because file exists")
-        }
-        try Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
-        catch {
+        // detection) publishes with link(2) instead, which fails when the
+        // target exists: of two concurrent writers exactly one wins.
+        try {
+          if (overwriteIfPossible) Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
+          else Files.createLink(dst, tmp)
+        } catch {
           case e: java.nio.file.FileSystemException =>
             Files.deleteIfExists(tmp)
             throw new FileAlreadyExistsException(
               s"Failed to rename temp file $tmp to $dst: ${e.getMessage}")
         }
+        Files.deleteIfExists(tmp)
       }
       override def cancel(): Unit = this.synchronized {
         if (terminated) return

@@ -24,7 +24,7 @@ class BenchAdjudicationSpec extends SparkSpec {
     val json = Bench.run(spark, sfDir = "unused",
       queries = Seq("toy_query" -> fast),
       baseline = Map("toy_query" -> 1e-9), // any real run is >2x this
-      floor = 0.0, adjRuns = 3)
+      floor = 0.0, adjRuns = 3).toJson
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(json)
     assert(node.get("regressed").toString.contains("toy_query"), json)
@@ -49,7 +49,7 @@ class BenchAdjudicationSpec extends SparkSpec {
       queries = Seq("toy_query" -> fast),
       baseline = Map("toy_query" -> 1e-9), // any real run is >2x this
       floor = 1e9,                         // but never over the floor
-      adjRuns = 3)
+      adjRuns = 3).toJson
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(json)
     assert(node.get("regressed").size() == 0, json)
@@ -65,7 +65,7 @@ class BenchAdjudicationSpec extends SparkSpec {
     val json = Bench.run(spark, sfDir = "unused",
       queries = Seq("toy_query" -> fast),
       baseline = Map("toy_query" -> 1e9), // unreachable: never flags
-      adjRuns = 3)
+      adjRuns = 3).toJson
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(json)
     assert(node.get("regressed").size() == 0)
@@ -130,13 +130,31 @@ class BenchAdjudicationSpec extends SparkSpec {
     assert(Bench.eraWarnOf(3.5, hasBaseline = false).isEmpty)
   }
 
+  // The fixed sweep of the compactOf/perqOf tests, as the model and as the
+  // full artifact the string-built Bench printed for it.
+  private val FixedSf = "/root/testdata/sf0.1"
+  private def fixedSweep(q12: Double): Bench.Sweep = {
+    import scala.collection.immutable.ListMap
+    Bench.Sweep(value = 216.54, era = 0.852, era_raw = 0.852, era_warn = None,
+      queries = ListMap("q09_topk" -> 0.41, "q12_cond_buckets" -> q12, "zz_other" -> 9.9),
+      cold = ListMap("q09_topk" -> 1.2), ratio = ListMap("q09_topk" -> 1.0),
+      ratio_norm = ListMap("q09_topk" -> 1.17), regressed = Nil,
+      adjudication = ListMap.empty, unbaselined = Seq("q214_media_decode_jpeg_envelope"),
+      materializes = Nil, failed = Nil, sf = FixedSf)
+  }
+  private def fixedFull(q12: String): String =
+    """{"metric":"total","value":216.54,"unit":"sec","run":"warm","exec":"noop_sink","era":0.852,"era_raw":0.852,"era_warn":null,"queries":{"q09_topk":0.41,"q12_cond_buckets":""" + q12 + ""","zz_other":9.9},"cold":{"q09_topk":1.2},"ratio":{"q09_topk":1.0},"ratio_norm":{"q09_topk":1.17},"regressed":[],"adjudication":{},"unbaselined":["q214_media_decode_jpeg_envelope"],"materializes":[],"failed":[],"sf":"""" + FixedSf + """"}"""
+
   test("compactOf: bounded-tail consumers get one complete parseable object") {
     // The round driver keeps a 2000-char tail of Bench stdout; the full
     // per-query artifact is ~25 KB and never fit (three rounds of
     // `parsed: null` driver artifacts). The compact line printed LAST must
     // stay under that bound and carry the adjudication fields verbatim.
-    val full = """{"metric":"total","value":216.54,"unit":"sec","run":"warm","exec":"noop_sink","era":0.852,"era_raw":0.852,"era_warn":null,"queries":{"q09_topk":0.41,"q12_cond_buckets":0.33,"zz_other":9.9},"cold":{"q09_topk":1.2},"ratio":{"q09_topk":1.0},"ratio_norm":{"q09_topk":1.17},"regressed":[],"adjudication":{},"unbaselined":["q214_media_decode_jpeg_envelope"],"materializes":[],"failed":[],"sf":"/root/testdata/sf0.1"}"""
-    val c = Bench.compactOf(full, 214)
+    val sweep = fixedSweep(q12 = 0.33)
+    assert(sweep.toJson == fixedFull(q12 = "0.33"))
+    val c = Bench.compactOf(sweep, 214).toJson
+    // byte-identical to the line the string-built artifact produced
+    assert(c == """{"metric":"total","value":216.54,"unit":"sec","run":"warm","exec":"noop_sink","compact":true,"n_queries":214,"era":0.852,"era_raw":0.852,"era_warn":null,"regressed":[],"unbaselined":["q214_media_decode_jpeg_envelope"],"failed":[],"queries":{"q09_topk":0.41,"q12_cond_buckets":0.33},"queries_note":"canary sample; full per-query artifact on the preceding stdout line and in SPARK_GRAFT_BENCH_OUT","sf":"""" + FixedSf + """"}""")
     assert(c.length < 2000, s"compact line must fit the driver tail: ${c.length}")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(c) // throws on malformed JSON
@@ -158,8 +176,11 @@ class BenchAdjudicationSpec extends SparkSpec {
     // 5-canary sample for two rounds. The perq line (printed last) must be
     // complete JSON with EVERY query's warm time and none of the bulky
     // evidence objects.
-    val full = """{"metric":"total","value":216.54,"unit":"sec","run":"warm","exec":"noop_sink","era":0.852,"era_raw":0.852,"era_warn":null,"queries":{"q09_topk":0.41,"q12_cond_buckets":0.330001874,"zz_other":9.9},"cold":{"q09_topk":1.2},"ratio":{"q09_topk":1.0},"ratio_norm":{"q09_topk":1.17},"regressed":[],"adjudication":{},"unbaselined":["q214_media_decode_jpeg_envelope"],"materializes":[],"failed":[],"sf":"/root/testdata/sf0.1"}"""
-    val p = Bench.perqOf(full, 214)
+    val sweep = fixedSweep(q12 = 0.330001874)
+    assert(sweep.toJson == fixedFull(q12 = "0.330001874"))
+    val p = Bench.perqOf(sweep, 214).toJson
+    // byte-identical to the line the string-built artifact produced
+    assert(p == """{"metric":"total","value":216.54,"unit":"sec","run":"warm","exec":"noop_sink","perq":true,"n_queries":214,"era":0.852,"era_raw":0.852,"era_warn":null,"regressed":[],"unbaselined":["q214_media_decode_jpeg_envelope"],"failed":[],"queries":{"q09_topk":0.41,"q12_cond_buckets":0.33,"zz_other":9.9},"sf":"""" + FixedSf + """"}""")
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = om.readTree(p) // throws on malformed JSON
     assert(node.get("perq").asBoolean())
@@ -185,14 +206,14 @@ class BenchAdjudicationSpec extends SparkSpec {
     // calibrate: measure once to build a baseline 3x under the real time
     val cal = Bench.run(spark, sfDir = "unused",
       queries = Seq("toy_query" -> steady, canary -> steady),
-      baseline = Map.empty, adjRuns = 2)
+      baseline = Map.empty, adjRuns = 2).toJson
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     base = om.readTree(cal).get("queries").get("toy_query").asDouble()
     val canaryBase = om.readTree(cal).get("queries").get(canary).asDouble()
     val json = Bench.run(spark, sfDir = "unused",
       queries = Seq("toy_query" -> steady, canary -> steady),
       baseline = Map("toy_query" -> base / 3.0, canary -> canaryBase / 3.0),
-      floor = 0.0, adjRuns = 2)
+      floor = 0.0, adjRuns = 2).toJson
     val node = om.readTree(json)
     val era = node.get("era").asDouble()
     assert(era > 1.5, s"era=$era in $json")

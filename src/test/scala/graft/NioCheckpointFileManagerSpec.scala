@@ -51,6 +51,36 @@ class NioCheckpointFileManagerSpec extends AnyFunSuite {
     assert(Files.list(d.resolve("commits")).count() == 1)
   }
 
+  test("two concurrent no-overwrite writers to one path: one winner, one FAEE") {
+    // Both writers close at once, many times over: a check-then-rename
+    // publish lets both pass the check and the later rename silently
+    // replace the earlier file.
+    val d = freshDir(); val m = mgr(d)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try (0 until 200).foreach { i =>
+      val f = new Path(d.resolve(s"commits/$i").toUri)
+      val outs = Seq("a", "b").map { w =>
+        val o = m.createAtomic(f, overwriteIfPossible = false); o.write(w.getBytes); w -> o
+      }
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val results = outs.map { case (w, o) =>
+        pool.submit[Either[Throwable, String]](() => {
+          start.await()
+          try { o.close(); Right(w) } catch { case e: Throwable => Left(e) }
+        })
+      }
+      start.countDown()
+      val rs = results.map(_.get())
+      val winners = rs.collect { case Right(w) => w }
+      assert(winners.length == 1, s"round $i: $rs")
+      assert(rs.collect { case Left(e) => e }.forall(_.isInstanceOf[FileAlreadyExistsException]), s"round $i: $rs")
+      val in = m.open(f); val buf = new Array[Byte](1); in.readFully(0L, buf); in.close()
+      assert(new String(buf) == winners.head, s"round $i")
+    } finally pool.shutdown()
+    val names = Files.list(d.resolve("commits")).toArray.map(_.toString)
+    assert(names.length == 200, "temp debris: " + names.filter(_.endsWith(".tmp")).mkString(","))
+  }
+
   test("overwriteIfPossible replaces the existing file atomically") {
     val d = freshDir(); val m = mgr(d)
     val f = new Path(d.resolve("state/1.delta").toUri)

@@ -70,4 +70,28 @@ class JsSemanticsSpec extends AnyFunSuite {
   test("JStr escapes controls, quotes, backslashes") {
     assert(JStr("a\"b\\c\nd").toJson == "\"a\\\"b\\\\c\\nd\"")
   }
+
+  test("JStr and JObj serialize like the per-character escaper on seeded strings") {
+    def oldQuote(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    val controls = (0 until 0x20).map(_.toChar.toString)
+    val edges = Seq("", "plain", "\"", "\\", "\\\"", "a\"b\\c\nd", "é ü 日本 \uD83D\uDE00",
+      "\uD800", "x\uDC00y", "\uDBFF", "\u007f\u0080\u2028") ++ controls :+ controls.mkString
+    val alphabet = "ab\"\\/é\u2028\uD800\uDC00\u007f" + controls.mkString
+    val rnd = new scala.util.Random(20261021L)
+    val seeded = Seq.fill(3000)(
+      Seq.fill(rnd.nextInt(20))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    for (s <- edges ++ seeded) {
+      assert(JStr(s).toJson == oldQuote(s), s"string ${s.map(_.toInt)}")
+      assert(JObj(s -> JArr(Seq(JStr(s), JNull, JNum(1.5))), "k" -> JBool(true)).toJson ==
+        "{" + oldQuote(s) + ":[" + oldQuote(s) + ",null,1.5],\"k\":true}")
+    }
+  }
 }

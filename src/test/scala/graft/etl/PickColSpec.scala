@@ -46,4 +46,20 @@ class PickColSpec extends AnyFunSuite {
   test("later duplicate-normalizing header shadows earlier (JS Map.set)") {
     assert(PickCol.pick(Seq("Url", "URL"), Seq("url")).contains("URL"))
   }
+
+  test("norm/normNoSpace equal the per-call replaceAll form on seeded headers") {
+    def oldNorm(s: String): String =
+      Option(s).getOrElse("").replace('\u00A0', ' ').replaceAll("\\s+", " ").trim.toLowerCase
+    def oldNormNoSpace(s: String): String = oldNorm(s).replaceAll("\\s+", "")
+    val edges = Seq(null, "", " ", "\u00A0", "\u2003", "Current\u00A0Position",
+      "  Status\t\tCode ", "a\r\nb", "\u2003Em\u2003Space\u2003", "MiXeD CaSe", "\u000b\u000c\u001c")
+    val alphabet = "aBcZ \t\r\n\u00A0\u2003\u000b\u000c\u0085\u3000_-1"
+    val rnd = new scala.util.Random(20261020L)
+    val seeded = Seq.fill(3000)(
+      Seq.fill(rnd.nextInt(16))(alphabet(rnd.nextInt(alphabet.length))).mkString)
+    for (h <- edges ++ seeded) {
+      assert(PickCol.norm(h) == oldNorm(h), s"norm of '$h'")
+      assert(PickCol.normNoSpace(h) == oldNormNoSpace(h), s"normNoSpace of '$h'")
+    }
+  }
 }

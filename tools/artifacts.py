@@ -4,12 +4,15 @@
 Usage:
   python3 tools/artifacts.py xl  <check_log> <docs> <emb> <out.json> [tier]
   python3 tools/artifacts.py multi <round> <what> <out.json> <tier>=<check_log> ...
+  python3 tools/artifacts.py skew <check_log> <round> <what> <out.json>
 
 The `xl` mode builds a CORRECTNESS_XL-style artifact (tier geometry header
 plus per-query rows); `multi` builds the CORRECTNESS_MULTI_SF summary from
-several tier logs. A check log is the stdout of tools/check.py: lines
-`ok   <query>: <n> rows exact` / `FAIL <query>: ...` and a final
-`<p>/<t> pass`.
+several tier logs; `skew` refreshes the per-query rows, round and
+description of an existing CORRECTNESS_SKEW-style artifact (its tier
+geometry header is kept) and fails unless every query passed. A check log
+is the stdout of tools/check.py: lines `ok   <query>: <n> rows exact` /
+`FAIL <query>: ...` and a final `<p>/<t> pass`.
 """
 import sys, json, re, math
 
@@ -68,6 +71,16 @@ def main():
                   open(out, "w"), indent=1)
         print(f"{out}: " + ", ".join(f"{k} {v['pass']}/{v['total']}"
                                      for k, v in sweeps.items()))
+    elif mode == "skew":
+        log, rnd, what, out = sys.argv[2], int(sys.argv[3]), sys.argv[4], sys.argv[5]
+        queries, p, t = parse(log)
+        if p != t:
+            raise SystemExit(f"{log}: {t - p} of {t} skew queries failed")
+        art = json.load(open(out))
+        art.update({"queries": queries, "pass": p, "total": t,
+                    "round": rnd, "what": what})
+        json.dump(art, open(out, "w"), indent=1)
+        print("skew artifact refreshed:", t, "queries")
     else:
         raise SystemExit(__doc__)
 
