@@ -41,6 +41,17 @@ object GraftSession {
       // and all) over a raw layer that skips the fork; see the class doc.
       .config("spark.hadoop.fs.file.impl", "graft.hadoop.FastLocalFileSystem")
       .config("spark.ui.enabled", "false")
+      // Generated-code cache (static; sized when codegen first runs).
+      // Spark's default of 100 classes is below a warm working set, so warm
+      // queries recompile, in Janino and then in the JIT, the classes that
+      // other queries evicted.
+      // One warm pass of the 214-gate sweep generates 3,393 distinct
+      // sources at sf0.01 (3,399 at sf0.001; 3 cores, a warm pass into an
+      // emptied cache after a cold one). 4096 holds that set with room
+      // for the per-segment LRU eviction and for the ~600 sources a sweep
+      // pass generates afresh and never reuses (4,010 entries held 91 MB
+      // of heap after two sweep passes).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
     // Experiment hook (dev A/Bs only — never set by the driver):
     // semicolon-separated k=v pairs applied LAST, so an isolated profile
     // can toggle one conf against the shipped defaults in the same

@@ -1,7 +1,9 @@
 package graft
 
+import graft.operators.{MaterializeOnce, Memo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated TPC-H-ish corpus (TESTDATA.md).
   *
@@ -9,14 +11,38 @@ import org.apache.spark.sql.functions._
   * predicate pushdown, so callers should select/filter directly on the result
   * and let the optimizer reach the scan. At cluster scale the same paths work
   * against partitioned directories; nothing here assumes local mode.
+  *
+  * A bare `spark.read.parquet` runs one schema-inference job per call. The
+  * loaders go through a per-session catalog instead ([[load]]), which
+  * infers a table's schema once and then scans with it, so a warm load runs
+  * no job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+  /** Inferred parquet schemas, per session and then per (path, source
+    * fingerprint). Per session, because the session's parquet settings
+    * shape what inference returns (e.g. `nanosAsLong`); weakly held, so a
+    * stopped session's schemas go with it. The fingerprint
+    * ([[MaterializeOnce.fingerprint]]) changes when a table is rewritten
+    * at the same path, so the rewrite's schema is inferred afresh. */
+  private val catalogs =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, Memo[(String, String), StructType]]())
+
+  /** A parquet scan of `$sfDir/$table.parquet` with its catalogued schema,
+    * inferred once per (session, path, fingerprint). A path the
+    * fingerprint cannot see (a missing or non-local one) is a bare read,
+    * inferred on every call. */
+  def load(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = s"$sfDir/$table.parquet"
+    val fp = MaterializeOnce.fingerprint(path)
+    if (fp == "absent") spark.read.parquet(path)
+    else spark.read.schema(catalogs.computeIfAbsent(spark, _ => new Memo)((path, fp))(
+      spark.read.parquet(path).schema)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -253,14 +253,14 @@ object Multimodal {
     * the bytes (corrupt container). */
   def decodeImageFeatures(bytes: Array[Byte]): Option[Array[Float]] = {
     val img = try {
-      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+      Option(MemImageIO.read(bytes))
     } catch { case _: Exception => None }
     img.map(imageStats)
   }
 
   /** The 8-dim pixel feature vector of one decoded image (shared by the
     * PNG/JPEG path and per-frame video stats). */
-  private def imageStats(im: java.awt.image.BufferedImage): Array[Float] = {
+  private[multimodal] def imageStats(im: java.awt.image.BufferedImage): Array[Float] = {
     val w = im.getWidth; val h = im.getHeight
     var sr = 0.0; var sg = 0.0; var sb = 0.0; var sl = 0.0; var sl2 = 0.0
     // Bulk scanline reads: per-pixel getRGB(x, y) pays a ColorModel
@@ -1114,7 +1114,7 @@ object Multimodal {
       if (fmt != "png" && fmt != "jpeg") r
       else {
         val img = try {
-          Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.content)))
+          Option(MemImageIO.read(r.content))
         } catch { case _: Exception => None }
         img match {
           case Some(im) if math.max(im.getWidth, im.getHeight) > maxDim =>
@@ -1131,9 +1131,7 @@ object Multimodal {
               java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
             g.drawImage(im, 0, 0, nw, nh, null)
             g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            r.copy(content = bos.toByteArray)
+            r.copy(content = MemImageIO.write(out, "png"))
           case _ => r
         }
       }
@@ -1166,9 +1164,8 @@ object Multimodal {
         decodeAviFrames(r.content) match {
           case Some(frames) =>
             (0 until frames.size by everyK).map { f =>
-              val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(frames(f), "png", bos)
-              MediaRow(r.media_id * 1000 + f, s"${r.kind}#frame$f", bos.toByteArray)
+              MediaRow(r.media_id * 1000 + f, s"${r.kind}#frame$f",
+                MemImageIO.write(frames(f), "png"))
             }
           case None => frameWindows(r, everyK)
         }
@@ -1220,10 +1217,8 @@ object Multimodal {
           g.drawImage(fim, fr.left, fr.top, null)
           g.dispose()
           if (fr.index % everyK == 0) {
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(canvas, "png", bos)
             out += MediaRow(r.media_id * 1000 + fr.index,
-              s"${r.kind}#frame${fr.index}", bos.toByteArray)
+              s"${r.kind}#frame${fr.index}", MemImageIO.write(canvas, "png"))
           }
           fr.disposal match {
             case 2 =>                             // restore-to-background

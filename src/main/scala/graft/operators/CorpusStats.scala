@@ -17,20 +17,16 @@ import org.apache.spark.sql.functions._
   * Both statistics come from ONE aggregation job and are memoized under the
   * same key discipline as [[MaterializeOnce]]: the key embeds the source
   * fingerprint, so a corpus regenerated at the same path within one JVM is
-  * re-counted rather than served stale. The map stores memoized FUTURES —
-  * the aggregation job runs OUTSIDE the map lock (running it inside
-  * `computeIfAbsent` held the hash-bin lock for the job's full duration, so
-  * concurrent first lookups of unrelated corpora hashing to the same bin
-  * serialized behind it — the same hazard MaterializeOnce's future form
-  * exists for).
+  * re-counted rather than served stale. The store is a [[Memo]], so the
+  * aggregation job runs outside any map lock, and the table is read through
+  * the session's catalog ([[graft.Tables.load]]).
   */
 object CorpusStats {
 
   /** (rowCount, maxId). */
   final case class Stats(n: Long, maxId: Long)
 
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[Stats]]()
+  private val cache = new Memo[String, Stats]
 
   /** Number of stat jobs run so far this JVM (spec hook: asserts the
     * memoization actually eliminates repeat jobs). Atomic — a plain
@@ -41,30 +37,14 @@ object CorpusStats {
 
   /** Row count and max of `idCol` for `$dir/$table.parquet`, computed in a
     * single Spark job per (dir, table, source fingerprint) per JVM. */
-  def of(s: SparkSession, dir: String, table: String, idCol: String): Stats = {
-    val key = s"$dir|$table|$idCol|${MaterializeOnce.fingerprint(dir, s"$table.parquet")}"
-    val fut = new java.util.concurrent.CompletableFuture[Stats]()
-    val prior = cache.putIfAbsent(key, fut)
-    if (prior != null) {
-      try prior.join()
-      catch { case e: java.util.concurrent.CompletionException =>
-        throw Option(e.getCause).getOrElse(e)
-      }
-    } else
-      try {
-        computeCount.incrementAndGet()
-        val r = s.read.parquet(s"$dir/$table.parquet")
-          .agg(org.apache.spark.sql.functions.count(lit(1)),
-               max(col(idCol).cast("long"))).head()
-        val stats = Stats(r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
-        fut.complete(stats)
-        stats
-      } catch { case e: Throwable =>
-        fut.completeExceptionally(e)
-        cache.remove(key, fut)
-        throw e
-      }
-  }
+  def of(s: SparkSession, dir: String, table: String, idCol: String): Stats =
+    cache(s"$dir|$table|$idCol|${MaterializeOnce.fingerprint(dir, s"$table.parquet")}") {
+      computeCount.incrementAndGet()
+      val r = graft.Tables.load(s, dir, table)
+        .agg(org.apache.spark.sql.functions.count(lit(1)),
+             max(col(idCol).cast("long"))).head()
+      Stats(r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1))
+    }
 
   def count(s: SparkSession, dir: String, table: String, idCol: String): Long =
     of(s, dir, table, idCol).n

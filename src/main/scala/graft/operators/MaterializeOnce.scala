@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Materialize-once store: relation key → temp parquet path. The
   * cluster-scale move ("write derived relations — signatures, indexes —
@@ -19,15 +20,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so repeated bench/test runs don't accumulate orphaned graft_mat_*
   * directories. Callers embed a data fingerprint (see [[fingerprint]]) in
   * the key so a corpus regenerated at the same path within one JVM is
-  * re-materialized rather than served stale. The map stores memoized
-  * futures — the write job runs OUTSIDE any map lock (a long-running job
-  * inside computeIfAbsent would block unrelated keys and deadlock on
-  * reentry).
+  * re-materialized rather than served stale. The store is a [[Memo]], so
+  * the write job runs once per key, outside any map lock. It keeps each
+  * relation's path with its schema, inferred once right after the write
+  * (the files never change after that), and every call reads the relation
+  * back with that schema: no schema-inference job per call.
   */
 object MaterializeOnce {
 
-  private val materialized =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+  private val materialized = new Memo[String, (String, StructType)]
   @volatile private var matRootCache: java.nio.file.Path = _
 
   private def matRoot(s: SparkSession): java.nio.file.Path = synchronized {
@@ -65,13 +66,17 @@ object MaterializeOnce {
     * same file count — only an identically-sized same-second rewrite can
     * alias, which parquet's non-deterministic encoding makes vanishingly
     * unlikely. */
-  def fingerprint(dir: String, table: String): String = {
+  def fingerprint(dir: String, table: String): String =
+    fingerprint(java.nio.file.Paths.get(dir, table).toString)
+
+  def fingerprint(path: String): String = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir, table)
+    val p = Paths.get(path)
     if (!Files.exists(p)) "absent"
     else {
-      val files = Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+      val files = scala.util.Using.resource(Files.walk(p))(
+        _.iterator().asScala.filter(Files.isRegularFile(_)).toList)
       val maxM = if (files.isEmpty) 0L else files.map(Files.getLastModifiedTime(_).toMillis).max
       val bytes = files.map(Files.size(_)).sum
       s"${files.size}:$maxM:$bytes"
@@ -84,29 +89,11 @@ object MaterializeOnce {
   def relationCount: Int = materialized.size
 
   def apply(key: String, s: SparkSession)(df: => DataFrame): DataFrame = {
-    val fut = new java.util.concurrent.CompletableFuture[String]()
-    val prior = materialized.putIfAbsent(key, fut)
-    val path =
-      if (prior != null) {
-        // join() wraps the computing thread's failure in a
-        // CompletionException — unwrap so every caller sees the same
-        // error surface regardless of which thread ran the write.
-        try prior.join()
-        catch { case e: java.util.concurrent.CompletionException =>
-          throw Option(e.getCause).getOrElse(e)
-        }
-      }
-      else
-        try {
-          val p = java.nio.file.Files.createTempDirectory(matRoot(s), "t_").toString
-          df.write.mode("overwrite").parquet(p)
-          fut.complete(p)
-          p
-        } catch { case e: Throwable =>
-          fut.completeExceptionally(e)
-          materialized.remove(key, fut)
-          throw e
-        }
-    s.read.parquet(path)
+    val (path, schema) = materialized(key) {
+      val p = java.nio.file.Files.createTempDirectory(matRoot(s), "t_").toString
+      df.write.mode("overwrite").parquet(p)
+      (p, s.read.parquet(p).schema)
+    }
+    s.read.schema(schema).parquet(path)
   }
 }

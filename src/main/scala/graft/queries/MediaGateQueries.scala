@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.multimodal.Multimodal
+import graft.multimodal.{MemImageIO, Multimodal}
 
 /** Per-round oracle gates for the multimodal decode surface (q204/q207) —
   * the q195 discipline applied to the last operator family that was
@@ -67,9 +67,7 @@ object MediaGateQueries extends QueryPack {
       val im = new java.awt.image.BufferedImage(w, h,
         java.awt.image.BufferedImage.TYPE_INT_RGB)
       im.setRGB(0, 0, w, h, px, 0, w)
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(im, "png", bos)
-      bos.toByteArray
+      MemImageIO.write(im, "png")
     } else {
       val out = new java.io.ByteArrayOutputStream(14 + 4 * w * h + 8)
       out.write("qoif".getBytes("US-ASCII"))
@@ -321,7 +319,7 @@ object MediaGateQueries extends QueryPack {
     val bp = Array.tabulate(256)(j => ((k * 4 + j * 11) % 256).toByte)
     val icm = new java.awt.image.IndexColorModel(8, 256, rp, gp, bp)
     val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    val ios = MemImageIO.output(bos)
     val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
     try {
       writer.setOutput(ios)
@@ -366,9 +364,7 @@ object MediaGateQueries extends QueryPack {
     g.setColor(new java.awt.Color(rgb))
     g.fillRect(0, 0, w, h)
     g.dispose()
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(im, "jpg", bos)
-    bos.toByteArray
+    MemImageIO.write(im, "jpg")
   }
 
   /** The bounded key slice as a typed media dataset — executor-side

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** CorpusStats contract: both scalars from one job, and that job runs once
@@ -25,38 +24,12 @@ class CorpusStatsSpec extends SparkSpec {
   test("memoized: a repeat lookup launches zero Spark jobs") {
     CorpusStats.of(spark, sf, "documents", "doc_id") // ensure computed
     val before = CorpusStats.computes
-    val sentinelJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val otherJobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val group = "cstats-sentinel"
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == group) sentinelJobs.incrementAndGet()
-        else otherJobs.incrementAndGet()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val jobs = jobsDuring {
       val again = CorpusStats.of(spark, sf, "documents", "doc_id")
       assert(again.n > 0)
       assert(CorpusStats.computes == before, "repeat lookup re-computed")
-      // The listener bus is async: prove "zero jobs above" by running one
-      // TAGGED sentinel job, waiting for the SENTINEL's own start event
-      // (matching on its job group — an untagged wait would be satisfied
-      // by a regressed lookup's job arriving first), then asserting no
-      // untagged job started. RDD count, not Dataset count: AQE splits a
-      // Dataset count's shuffle into two jobs.
-      spark.sparkContext.setJobGroup(group, "CorpusStatsSpec sentinel")
-      try spark.sparkContext.range(0, 10).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (sentinelJobs.get() < 1 && System.nanoTime() < deadline)
-        Thread.sleep(20)
-      assert(sentinelJobs.get() == 1, "sentinel job start never observed")
-      assert(otherJobs.get() == 0,
-        s"repeat lookup launched ${otherJobs.get()} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"repeat lookup launched $jobs Spark job(s)")
   }
 
   test("distinct corpora and a regenerated corpus get fresh stats") {

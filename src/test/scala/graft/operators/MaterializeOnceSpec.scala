@@ -30,4 +30,11 @@ class MaterializeOnceSpec extends SparkSpec {
     val other = MaterializeOnce("spec-key-2", spark)(build(4))
     assert(other.count() == 4 && computes == 2)
   }
+
+  test("a repeat read uses the schema kept at write time: no Spark job") {
+    val first = MaterializeOnce("spec-key-3", spark)(spark.range(6).selectExpr("id", "id % 2 AS odd"))
+    assert(first.schema == spark.read.parquet(first.inputFiles.head).schema)
+    assert(jobsDuring(MaterializeOnce("spec-key-3", spark)(sys.error("recomputed"))) == 0)
+    assert(MaterializeOnce("spec-key-3", spark)(sys.error("recomputed")).count() == 6)
+  }
 }
