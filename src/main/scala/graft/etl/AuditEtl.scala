@@ -3,6 +3,7 @@ package graft.etl
 import J._
 import scala.collection.mutable
 import scala.util.control.NonFatal
+import graft.sources.ZipCentral
 
 /** The audit ETL: one client ZIP in → normalized doc + scores + manifest
   * out (reference parity: /root/reference/src/etl.js:93-453 `processZip`).
@@ -75,7 +76,7 @@ object AuditEtl {
                  runDate: String,
                  artifact: (String, Array[Byte]) => Unit = (_, _) => (),
                  log: EtlLog = EtlLog()): Result = {
-    if (!Zips.isZip(zipBytes)) {
+    if (!ZipCentral.isZip(zipBytes)) {
       artifact("ZIP_DEBUG.bin", zipBytes)
       throw new IllegalArgumentException(
         "Downloaded file is not a ZIP. Use a direct-download link (Drive: uc?export=download&id=FILE_ID).")

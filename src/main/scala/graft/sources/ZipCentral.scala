@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.util.zip.{DataFormatException, Inflater, ZipException}
+import java.util.zip.{CRC32, DataFormatException, Inflater, ZipException}
 
 /** Positioned byte source for random-access ZIP reading: the abstraction
   * that lets [[ZipCentral]] read archive TAILS (EOCD + central directory)
@@ -28,25 +28,26 @@ final class ArrayZipSource(bytes: Array[Byte]) extends ZipByteSource {
 }
 
 /** Random-access ZIP reading via the central directory (PKWARE APPNOTE.TXT,
-  * the public ZIP format spec; same archives `etl.Zips` streams).
+  * the public ZIP format spec) — the engine's one ZIP reader. Like AdmZip,
+  * the reference's reader, it indexes entries from the central directory.
   *
-  * `etl.Zips.entries` streams the whole archive and inflates EVERY entry —
-  * the right shape for the audit kernel, which consumes every file. The
-  * DSv2 scan path (`ZipEntrySource`) needs the opposite: list entry
-  * metadata WITHOUT reading or inflating entry data (column-pruned scans),
-  * and inflate ONLY the entries a pushed-down predicate selects. The
-  * central directory at the archive tail carries name/sizes/method/offset
-  * for every entry, so against a [[ZipByteSource]] a metadata-only scan
-  * reads tail + CD bytes only, and a one-entry lookup adds two ranged
-  * reads (local header, data span) for exactly that entry.
+  * Two callers: the audit kernel (`etl.Zips.entries`, over an
+  * [[ArrayZipSource]]) inflates every entry; the DSv2 scan path
+  * (`ZipEntrySource`) lists entry metadata WITHOUT reading or inflating
+  * entry data (column-pruned scans) and inflates ONLY the entries a
+  * pushed-down predicate selects. The central directory at the archive
+  * tail carries name/sizes/method/offset for every entry, so against a
+  * [[ZipByteSource]] a metadata-only scan reads tail + CD bytes only, and a
+  * one-entry lookup adds two ranged reads (local header, data span) for
+  * exactly that entry.
   *
   * ZIP64 (APPNOTE §4.3.14/4.5.3) is fully read: the ZIP64 EOCD locator +
   * record replace saturated EOCD fields, and the 0x0001 extra field
   * replaces saturated per-entry sizes/offsets — so >4 GiB archives and
-  * >65535-entry directories list and inflate. The one retained bound is
-  * per ENTRY: a single entry's (compressed or inflated) bytes must fit a
-  * JVM array, so entries past ~2 GiB throw a clear error at inflate time
-  * (listing them is fine).
+  * >65535-entry directories list. Inflating is bounded per entry (its
+  * bytes must fit a JVM array) and per archive (a [[Budget]]), and every
+  * inflated entry is checked against its central record: exact size and
+  * CRC-32.
   */
 object ZipCentral {
 
@@ -65,6 +66,33 @@ object ZipCentral {
   /** A single entry's bytes must fit one JVM array. */
   private val MaxEntryBytes: Long = Int.MaxValue.toLong - 8
 
+  /** `zipBuf[0] === 0x50 && zipBuf[1] === 0x4B` (the reference's etl.js:102). */
+  def isZip(bytes: Array[Byte]): Boolean =
+    bytes.length >= 2 && bytes(0) == 0x50.toByte && bytes(1) == 0x4B.toByte
+
+  /** Zip-bomb guards: all entries of one archive together inflate to at
+    * most `MaxInflatedBytes`, and to at most `MaxRatio` times the
+    * archive's own size once past `RatioFloorBytes`. */
+  val MaxInflatedBytes: Long = 512L << 20
+  val MaxRatio: Long = 100
+  val RatioFloorBytes: Long = 16L << 20
+
+  /** What one archive may still inflate to. A reader keeps one per
+    * archive; a nested archive gets its own, from its own length. */
+  final class Budget(archiveBytes: Long) {
+    val limit: Long =
+      math.min(MaxInflatedBytes, math.max(RatioFloorBytes, MaxRatio * archiveBytes))
+    private var left = limit
+
+    /** Charges `e`'s declared size; [[read]] calls it before it allocates. */
+    def charge(e: Entry): Unit = {
+      if (e.size > left)
+        throw new ZipException(s"entry ${e.name} inflates the $archiveBytes-byte " +
+          s"archive past its $limit-byte limit")
+      left -= e.size
+    }
+  }
+
   private def u16(b: Array[Byte], i: Int): Int =
     (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
   private def u32(b: Array[Byte], i: Int): Long =
@@ -77,7 +105,7 @@ object ZipCentral {
     * (65535) + the ZIP64 EOCD locator (20) that precedes the EOCD. */
   val MaxTailBytes: Int = 22 + 65535 + 20
 
-  /** Entries in central-directory order (== ZipInputStream order for
+  /** Entries in central-directory order (== local-header order for
     * archives written front-to-back, which is every writer in practice).
     * Reads: one tail span, the CD span — nothing else (the magic is
     * validated from the tail read when the tail covers offset 0; larger
@@ -89,7 +117,7 @@ object ZipCentral {
     val tailLen = math.min(src.length, MaxTailBytes.toLong).toInt
     val tailStart = src.length - tailLen
     val tail = src.readAt(tailStart, tailLen)
-    if (tailStart == 0L && !graft.etl.Zips.isZip(tail))
+    if (tailStart == 0L && !isZip(tail))
       throw new ZipException("not a zip archive (bad magic)")
     var eocd = -1
     var i = tailLen - 22
@@ -231,12 +259,17 @@ object ZipCentral {
     * the 30-byte local header (whose own name/extra lengths position the
     * data; they can differ from the central record's), then exactly the
     * compressed span. Sizes come from the central record because a
-    * streamed local header (flag bit 3) stores zeros there. */
-  def read(src: ZipByteSource, e: Entry): Array[Byte] = {
+    * streamed local header (flag bit 3) stores zeros there. In order:
+    * the 2 GiB bound, the archive's `budget` (charged with the declared
+    * size before any buffer is allocated), the stored-size check, a
+    * deflate stream that ends exactly at both declared sizes, and the
+    * CRC-32. */
+  def read(src: ZipByteSource, e: Entry, budget: Budget): Array[Byte] = {
     if (e.compressedSize > MaxEntryBytes || e.size > MaxEntryBytes)
       throw new ZipException(
         s"entry ${e.name} is ${e.size} bytes (${e.compressedSize} compressed) — " +
           "exceeds the 2 GiB single-entry buffer limit")
+    budget.charge(e)
     val p = e.localHeaderOffset
     if (p < 0 || p + 30 > src.length)
       throw new ZipException(s"bad local header offset for ${e.name} at $p")
@@ -248,7 +281,7 @@ object ZipCentral {
     val dataStart = p + 30 + nameLen + extraLen
     if (dataStart + e.compressedSize > src.length)
       throw new ZipException(s"truncated entry data for ${e.name}")
-    e.method match {
+    val out = e.method match {
       case 0 =>
         // A stored entry's two central-directory sizes must agree; on a
         // corrupt record a clipped read would silently zero-pad (or clip)
@@ -257,32 +290,49 @@ object ZipCentral {
           throw new ZipException(s"stored entry ${e.name} has size ${e.size}" +
             s" != compressed size ${e.compressedSize} (corrupt record)")
         src.readAt(dataStart, e.size.toInt)
-      case 8 =>
-        val data = src.readAt(dataStart, e.compressedSize.toInt)
-        val inf = new Inflater(true)
-        try {
-          inf.setInput(data)
-          val out = new Array[Byte](e.size.toInt)
-          var written = 0
-          while (written < out.length && !inf.finished()) {
-            val k = inf.inflate(out, written, out.length - written)
-            if (k == 0 && inf.needsInput())
-              throw new ZipException(s"truncated deflate stream for ${e.name}")
-            written += k
-          }
-          if (written != out.length)
-            throw new ZipException(s"short inflate for ${e.name}: $written/${out.length}")
-          out
-        } catch {
-          case d: DataFormatException => throw new ZipException(s"bad deflate data for ${e.name}: ${d.getMessage}")
-        } finally inf.end()
+      case 8 => inflate(src.readAt(dataStart, e.compressedSize.toInt), e)
       case m => throw new ZipException(s"unsupported compression method $m for ${e.name}")
     }
+    val crc = new CRC32
+    crc.update(out)
+    if (crc.getValue != e.crc32)
+      throw new ZipException(
+        f"invalid entry CRC for ${e.name} (expected 0x${e.crc32}%x but got 0x${crc.getValue}%x)")
+    out
   }
 
-  /** Array conveniences (tests, parity checks, nested inner archives). */
+  private def inflate(data: Array[Byte], e: Entry): Array[Byte] = {
+    val inf = new Inflater(true)
+    try {
+      inf.setInput(data)
+      val out = new Array[Byte](e.size.toInt)
+      var written = 0
+      while (written < out.length && !inf.finished()) {
+        val k = inf.inflate(out, written, out.length - written)
+        if (k == 0 && inf.needsInput())
+          throw new ZipException(s"truncated deflate stream for ${e.name}")
+        written += k
+      }
+      if (written != out.length)
+        throw new ZipException(s"short inflate for ${e.name}: $written/${out.length}")
+      // A full buffer may still sit before the final block's end marker;
+      // one spare byte of room tells that apart from an understated size.
+      if (!inf.finished() && inf.inflate(new Array[Byte](1)) > 0)
+        throw new ZipException(s"entry ${e.name} inflates past its declared ${e.size} bytes")
+      if (!inf.finished())
+        throw new ZipException(s"truncated deflate stream for ${e.name}")
+      if (inf.getRemaining != 0)
+        throw new ZipException(s"deflate stream of ${e.name} ends ${inf.getRemaining} bytes " +
+          s"before its declared ${e.compressedSize} compressed bytes")
+      out
+    } catch {
+      case d: DataFormatException => throw new ZipException(s"bad deflate data for ${e.name}: ${d.getMessage}")
+    } finally inf.end()
+  }
+
+  /** Array conveniences for tests: `read` charges a fresh budget. */
   def centralDirectory(bytes: Array[Byte]): Vector[Entry] =
     centralDirectory(new ArrayZipSource(bytes))
   def read(bytes: Array[Byte], e: Entry): Array[Byte] =
-    read(new ArrayZipSource(bytes), e)
+    read(new ArrayZipSource(bytes), e, new Budget(bytes.length))
 }

@@ -373,6 +373,9 @@ final class ZipPartitionReader(part: ZipArchivePartition,
     s
   }
 
+  /** One inflate budget for the archive; an inner archive gets its own. */
+  private lazy val budget = new ZipCentral.Budget(part.length)
+
   /** (metadata, inflate-thunk) pairs; nested archives expand in place. */
   private lazy val rows: Iterator[(ZipScan.Meta, () => Array[Byte])] = {
     val top = ZipCentral.centralDirectory(src)
@@ -382,35 +385,38 @@ final class ZipPartitionReader(part: ZipArchivePartition,
         Iterator.single((
           ZipScan.Meta(part.archive, e.name, nested = false,
             ZipEntrySource.methodName(e.method), e.compressedSize, e.size),
-          () => inflate(src, e)))
+          () => inflate(src, e, budget)))
       } else {
         // Enumerating an inner archive costs one inflation of the inner
         // blob (unavoidable: its central directory lives inside); corrupt
         // inner ZIPs surface as zero rows rather than failing the scan —
         // the AuditEtl `partial` discipline (etl.js:190-196).
+        lazy val blob = inflate(src, e, budget)
         try {
-          val innerSrc = new ArrayZipSource(inflate(src, e))
+          val innerSrc = new ArrayZipSource(blob)
+          val innerBudget = new ZipCentral.Budget(blob.length)
           val inner = ZipCentral.centralDirectory(innerSrc)
           inner.iterator.filterNot(_.isDirectory).map { ie =>
             (ZipScan.Meta(part.archive, s"${e.name}::${ie.name}", nested = true,
               ZipEntrySource.methodName(ie.method), ie.compressedSize, ie.size),
-              () => inflate(innerSrc, ie))
+              () => inflate(innerSrc, ie, innerBudget))
           }
         } catch {
           case _: java.util.zip.ZipException =>
             Iterator.single((
               ZipScan.Meta(part.archive, e.name, nested = false,
                 ZipEntrySource.methodName(e.method), e.compressedSize, e.size),
-              () => inflate(src, e)))
+              () => blob))
         }
       }
     }.filter { case (m, _) => filters.forall(ZipFilters.eval(_, m)) }
   }
 
-  private def inflate(from: ZipByteSource, e: ZipCentral.Entry): Array[Byte] = {
+  private def inflate(from: ZipByteSource, e: ZipCentral.Entry,
+                      budget: ZipCentral.Budget): Array[Byte] = {
     ZipScanMetrics.entriesInflated.incrementAndGet()
     ZipScanMetrics.bytesInflated.addAndGet(e.size)
-    ZipCentral.read(from, e)
+    ZipCentral.read(from, e, budget)
   }
 
   private var current: InternalRow = _

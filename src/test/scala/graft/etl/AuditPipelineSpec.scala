@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkSpec
+import graft.sources.ZipCentral
 import java.nio.file.{Files, Paths}
 
 class AuditPipelineSpec extends SparkSpec {
@@ -159,8 +160,8 @@ class AuditPipelineSpec extends SparkSpec {
     // Zeros deflate about 1000:1: this entry is ~17 KB in the archive and
     // inflates past the ratio guard, which stops it before it is buffered.
     val bomb = Fixtures.zip("ahrefs_keywords.csv" ->
-      new Array[Byte]((Zips.RatioFloorBytes + (1 << 20)).toInt))
-    assert(bomb.length * Zips.MaxRatio < Zips.RatioFloorBytes)
+      new Array[Byte]((ZipCentral.RatioFloorBytes + (1 << 20)).toInt))
+    assert(bomb.length * ZipCentral.MaxRatio < ZipCentral.RatioFloorBytes)
     val row = AuditPipeline.process(AuditPipeline.AuditJob("bomb.zip", "c", "d", "r", bomb))
     assert(!row.ok)
     assert(row.error.startsWith("java.util.zip.ZipException") && row.error.contains("limit"))

@@ -5,9 +5,9 @@ import java.nio.file.{Files, Paths}
 import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
 
 import graft.SparkSpec
-import graft.etl.{Fixtures, SmartCsv, Zips}
+import graft.etl.{Fixtures, JdkZip, SmartCsv, Zips}
 
-/** DSv2 graft-zip table: parity with the streaming reader, plus the two
+/** DSv2 graft-zip table: parity with the JDK's streaming reader, plus the two
   * properties that justify a TableProvider at scale — column pruning and
   * filter pushdown must be observable as SKIPPED DECOMPRESSION, not just
   * plan cosmetics. */
@@ -45,9 +45,37 @@ class ZipEntrySourceSpec extends SparkSpec {
     bos.toByteArray
   }
 
+  /** A seeded archive: 1-8 entries, each STORED or DEFLATED at a random
+    * level, holding random bytes or repetitive CSV text, with a directory
+    * entry now and then. */
+  private def seededZip(seed: Long): Array[Byte] = {
+    val rnd = new java.util.Random(seed)
+    val bos = new ByteArrayOutputStream()
+    val zos = new ZipOutputStream(bos)
+    for (i <- 0 until 1 + rnd.nextInt(8)) {
+      if (rnd.nextInt(4) == 0) { zos.putNextEntry(new ZipEntry(s"d$i/")); zos.closeEntry() }
+      val data =
+        if (rnd.nextBoolean()) { val b = new Array[Byte](rnd.nextInt(20000)); rnd.nextBytes(b); b }
+        else (0 until rnd.nextInt(2000)).map(k => s"row$k,${k % 7}\n").mkString.getBytes("UTF-8")
+      val e = new ZipEntry(s"d$i/e$i.csv")
+      if (rnd.nextBoolean()) {
+        e.setMethod(ZipEntry.STORED); e.setSize(data.length)
+        val crc = new CRC32(); crc.update(data); e.setCrc(crc.getValue)
+      } else zos.setLevel(rnd.nextInt(10))
+      zos.putNextEntry(e); zos.write(data); zos.closeEntry()
+    }
+    zos.close()
+    bos.toByteArray
+  }
+
   test("ZipCentral parity: central-directory enumeration + random-access read equal the streaming reader") {
-    for (bytes <- Seq(Fixtures.fullZip, Fixtures.minimalZip, mixedMethodZip)) {
-      val streamed = Zips.entries(bytes)
+    val archives = Seq(Fixtures.fullZip, Fixtures.minimalZip, Fixtures.innerSiteAudit,
+      mixedMethodZip) ++ (1L to 8L).map(seededZip)
+    for (bytes <- archives) {
+      val streamed = JdkZip.entries(bytes)
+      val kernel = Zips.entries(bytes)
+      assert(kernel.keys.toVector == streamed.keys.toVector)
+      streamed.foreach { case (n, b) => assert(kernel(n).toSeq == b.toSeq, s"kernel mismatch for $n") }
       val cd = ZipCentral.centralDirectory(bytes).filterNot(_.isDirectory)
       assert(cd.map(_.name) == streamed.keys.toVector)
       cd.foreach { e =>
@@ -56,7 +84,7 @@ class ZipEntrySourceSpec extends SparkSpec {
         assert(e.size == streamed(e.name).length.toLong)
       }
     }
-    // Empty archives and non-ZIPs behave like Zips.entries.
+    // Empty archives and non-ZIPs behave like the streaming reader.
     assert(ZipCentral.centralDirectory(Fixtures.emptyZip).isEmpty)
     intercept[java.util.zip.ZipException] {
       ZipCentral.centralDirectory(Fixtures.notAZip)
