@@ -11,7 +11,7 @@ import graft.sources.ZipCentral
   * This kernel is deliberately single-archive and pure (bytes → three JSON
   * documents): an audit ZIP is bounded (one client run), so the scale
   * dimension is the NUMBER of archives — see graft.etl.AuditPipeline for
-  * the distributed mapping over a binaryFile DataFrame.
+  * the distributed mapping over listed, size-balanced archive slots.
   *
   * JS-semantics notes (all deliberate):
   *   - a field missing from a short CSV row reads as JS `undefined`:
@@ -112,8 +112,9 @@ object AuditEtl {
         // the KV store (etl.js:119-121).
         artifact("ahrefs_keywords_headers.json",
           JArr(headers.map(str)).toJson.getBytes("UTF-8"))
-        val posCol = PickCol.pick(headers, Seq("Current position"))
-          .orElse(PickCol.pick(headers, Seq("Previous position")))
+        val cols = new PickCol.Lookup(headers)
+        val posCol = cols.pick(Seq("Current position"))
+          .orElse(cols.pick(Seq("Previous position")))
         log.info("Ahrefs keywords: position column",
           "posCol" -> posCol.getOrElse("null"))
         posCol.foreach { pc =>
@@ -299,10 +300,10 @@ object AuditEtl {
       if (rows.nonEmpty) {
         prov.set("brightlocal", bool(true))
         mEntry("brightlocal_citations.csv").set("rows", int(rows.length))
-        val headers = rows.head.keys.toSeq
-        val statusCol = PickCol.pick(headers, Seq("Status"))
-        val gStatusCol = PickCol.pick(headers, Seq("General Status"))
-        val linkCol = PickCol.pick(headers, Seq("Citation Link"))
+        val cols = new PickCol.Lookup(rows.head.keys.toSeq)
+        val statusCol = cols.pick(Seq("Status"))
+        val gStatusCol = cols.pick(Seq("General Status"))
+        val linkCol = cols.pick(Seq("Citation Link"))
         var good = 0
         var total = 0
         for (r <- rows) {
@@ -339,12 +340,10 @@ object AuditEtl {
     readEntry("brightlocal_gbp_insights.csv").foreach { buf =>
       val rows = SmartCsv.parse(buf)
       if (rows.nonEmpty) {
-        val headers = rows.head.keys.toSeq
-        val colReviews = PickCol.pick(headers,
-          Seq("review count", "reviews", "reviews_total"))
-        val colRating = PickCol.pick(headers,
-          Seq("star rating", "rating", "reviews_average_rating"))
-        val colPhotos = PickCol.pick(headers, Seq("photos", "photos_total"))
+        val cols = new PickCol.Lookup(rows.head.keys.toSeq)
+        val colReviews = cols.pick(Seq("review count", "reviews", "reviews_total"))
+        val colRating = cols.pick(Seq("star rating", "rating", "reviews_average_rating"))
+        val colPhotos = cols.pick(Seq("photos", "photos_total"))
         val reviews = local.obj("reviews")
         val gbp = local.obj("gbp")
         colReviews.foreach(c =>

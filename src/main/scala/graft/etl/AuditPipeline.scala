@@ -1,20 +1,28 @@
 package graft.etl
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocatedFileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 import java.nio.file.{Files, Paths}
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
 /** Distributed audit processing: the reference runs ONE zip per actor
   * invocation (/root/reference/src/main.js:27-38); the Spark-native shape
-  * is a DataFrame of archives → one result row per archive, with the pure
+  * is a Dataset of archives → one result row per archive, with the pure
   * per-archive kernel (AuditEtl.processZip) mapped in executors.
   *
-  * Scale notes: `binaryFile` is Spark's built-in many-small-binaries
-  * source (each archive ≤ spark.sql.files.maxPartitionBytes lands in one
-  * task); results are three JSON documents per archive — a columnar
-  * DataFrame, writable to parquet or fanned out as per-audit JSON files
-  * (the reference's KV-store layout). Nothing is collected to the driver.
+  * Scale notes: the driver lists the archives through the file index of a
+  * `binaryFile` relation (no job, no bytes read) and packs them by size
+  * into balanced slots, largest first; each slot prefers the hosts that
+  * hold most of its bytes, as a scan partition does, and its task opens
+  * its own archives through Hadoop `FileSystem`, so archive bytes never
+  * pass through a scan row. Results are three JSON documents per archive — a columnar
+  * Dataset, writable to parquet or fanned out as per-audit JSON files (the
+  * reference's KV-store layout). Nothing is collected to the driver.
   */
 object AuditPipeline {
 
@@ -25,23 +33,111 @@ object AuditPipeline {
                             normalizedJson: String, scoresJson: String,
                             manifestJson: String)
 
+  /** One listed archive: its path as the file index qualifies it, its
+    * length at listing time (the packing weight), and the hosts of its
+    * largest block (a `FileScanRDD` split's hosts for a whole file). */
+  private[etl] final case class Archive(path: Path, length: Long, hosts: Seq[String])
+
+  /** Slots per core: enough that a slow archive is not the whole pass. */
+  private[etl] val BinsPerCore = 4
+
+  /** The largest archive one task buffers whole: the JDK's soft array
+    * limit. A larger archive is that archive's `ok=false` row. */
+  private[etl] val MaxArchiveBytes: Long = Int.MaxValue - 8
+
   /** Process every `*.zip` under `dir` (recursively). Client/domain default
     * from the file name (client__domain__runDate.zip, else stem). */
   def processDir(spark: SparkSession, dir: String): Dataset[AuditRow] = {
     import spark.implicits._
-    val bins = spark.read.format("binaryFile")
+    val sc = spark.sparkContext
+    val bins = pack(listArchives(spark, dir), BinsPerCore * sc.defaultParallelism,
+      spark.sessionState.conf.filesMaxPartitionBytes)
+    val conf = sc.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    spark.createDataset(sc.makeRDD(bins.map(bin => bin -> preferredHosts(bin)))
+      .flatMap(bin => bin.iterator.map(processArchive(_, conf.value.value))))
+  }
+
+  /** The three hosts holding the most of a bin's bytes, `localhost` left
+    * out — the rule `FilePartition.preferredLocations` applies to a scan
+    * partition, so a bin's task is scheduled where its archives are. */
+  private[etl] def preferredHosts(bin: Seq[Archive]): Seq[String] =
+    bin.flatMap(a => a.hosts.filter(_ != "localhost").map(_ -> a.length))
+      .groupMapReduce(_._1)(_._2)(_ + _).toSeq
+      .sortBy { case (host, bytes) => (-bytes, host) }.take(3).map(_._1)
+
+  /** The `*.zip` files under `dir` exactly as a `binaryFile` scan sees
+    * them (glob, recursive lookup, hidden-file and empty-file rules), read
+    * off the relation's file index on the driver. */
+  private[etl] def listArchives(spark: SparkSession, dir: String): Seq[Archive] = {
+    val plan = spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.zip")
       .option("recursiveFileLookup", "true")
       .load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-    bins.map { case (path, content) =>
-      val stem = path.split('/').last.stripSuffix(".zip")
-      val parts = stem.split("__")
-      val (client, domain, runDate) =
-        if (parts.length == 3) (parts(0), parts(1), parts(2))
-        else (stem, stem, "")
+      .queryExecution.analyzed
+    val index = plan.collectFirst { case l: LogicalRelation => l.relation } match {
+      case Some(r: HadoopFsRelation) => r.location
+      case other => throw new IllegalStateException(s"binaryFile resolved to $other")
+    }
+    index.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+      val hosts = f.fileStatus match {
+        case l: LocatedFileStatus if l.getBlockLocations.nonEmpty =>
+          l.getBlockLocations.maxBy(_.getLength).getHosts.toSeq
+        case _ => Nil
+      }
+      Archive(f.getPath, f.getLen, hosts)
+    }
+  }
+
+  /** Longest-processing-time-first packing (Graham 1969): archives in
+    * decreasing size, each into the least-loaded bin. `minBins` bins (fewer
+    * only when there are fewer archives); an archive that would push a
+    * non-empty bin past `maxBinBytes` opens a new bin instead, so only a
+    * single archive can exceed it. Ties break on the path, so the packing
+    * is deterministic. */
+  private[etl] def pack(archives: Seq[Archive], minBins: Int,
+                        maxBinBytes: Long): Seq[Seq[Archive]] = {
+    final class Bin(val id: Int) {
+      var load = 0L
+      val items = mutable.ArrayBuffer.empty[Archive]
+    }
+    val heap = mutable.PriorityQueue.empty[Bin](
+      Ordering.by((b: Bin) => (b.load, b.id)).reverse)
+    val bins = mutable.ArrayBuffer.tabulate(math.min(archives.length, math.max(1, minBins)))(new Bin(_))
+    heap ++= bins
+    for (a <- archives.sortBy(a => (-a.length, a.path.toString))) {
+      val least = heap.dequeue()
+      val bin =
+        if (least.items.isEmpty || least.load + a.length <= maxBinBytes) least
+        else { heap.enqueue(least); val b = new Bin(bins.length); bins += b; b }
+      bin.items += a
+      bin.load += a.length
+      heap.enqueue(bin)
+    }
+    bins.map(_.items.toSeq).toSeq
+  }
+
+  /** Reads one archive through Hadoop `FileSystem` and maps it through
+    * [[process]]. A read error, or an archive over `maxBytes`, is that
+    * archive's `ok=false` row. */
+  private[etl] def processArchive(a: Archive, conf: Configuration,
+                                  maxBytes: Long = MaxArchiveBytes): AuditRow = {
+    val path = a.path.toString
+    val stem = path.split('/').last.stripSuffix(".zip")
+    val parts = stem.split("__")
+    val (client, domain, runDate) =
+      if (parts.length == 3) (parts(0), parts(1), parts(2))
+      else (stem, stem, "")
+    try {
+      val fs = a.path.getFileSystem(conf)
+      val len = fs.getFileStatus(a.path).getLen
+      if (len > maxBytes)
+        throw new java.io.IOException(s"$path is $len bytes, over the $maxBytes-byte limit")
+      val content = new Array[Byte](len.toInt)
+      val in = fs.open(a.path)
+      try in.readFully(content) finally in.close()
       process(AuditJob(path, client, domain, runDate, content))
+    } catch {
+      case NonFatal(e) => failed(path, client, domain, runDate, e)
     }
   }
 
@@ -51,10 +147,13 @@ object AuditPipeline {
       AuditRow(job.path, job.client, job.domain, job.runDate, ok = true, error = "",
         r.normalized.toJson, r.scores.toJson, r.manifest.toJson)
     } catch {
-      case NonFatal(e) =>
-        AuditRow(job.path, job.client, job.domain, job.runDate, ok = false,
-          error = e.toString, normalizedJson = "", scoresJson = "", manifestJson = "")
+      case NonFatal(e) => failed(job.path, job.client, job.domain, job.runDate, e)
     }
+
+  private def failed(path: String, client: String, domain: String, runDate: String,
+                     e: Throwable): AuditRow =
+    AuditRow(path, client, domain, runDate, ok = false, error = e.toString,
+      normalizedJson = "", scoresJson = "", manifestJson = "")
 
   /** Columnar result surface (for parquet/SQL over many audits). */
   def toFrame(rows: Dataset[AuditRow]): DataFrame = rows.toDF()

@@ -21,13 +21,21 @@ object PickCol {
 
   def normNoSpace(s: String): String = Whitespace.matcher(norm(s)).replaceAll("")
 
-  /** Returns the ORIGINAL header name, as the reference does (rows are then
-    * indexed by the original key). */
-  def pick(headers: Seq[String], candidates: Seq[String]): Option[String] = {
-    val lookup = headers.map(h => norm(h) -> h).toMap
-    val lookupNoSpace = headers.map(h => normNoSpace(h) -> h).toMap
-    candidates.iterator.flatMap { want =>
-      lookup.get(norm(want)).orElse(lookupNoSpace.get(normNoSpace(want)))
-    }.nextOption()
+  /** One header set's two lookup maps, built once and shared by every
+    * `pick` over those headers (the no-space map only once a candidate
+    * misses the exact one). */
+  final class Lookup(headers: Seq[String]) {
+    private val exact = headers.map(h => norm(h) -> h).toMap
+    private lazy val noSpace = headers.map(h => normNoSpace(h) -> h).toMap
+
+    /** Returns the ORIGINAL header name, as the reference does (rows are
+      * then indexed by the original key). */
+    def pick(candidates: Seq[String]): Option[String] =
+      candidates.iterator.flatMap { want =>
+        exact.get(norm(want)).orElse(noSpace.get(normNoSpace(want)))
+      }.nextOption()
   }
+
+  def pick(headers: Seq[String], candidates: Seq[String]): Option[String] =
+    new Lookup(headers).pick(candidates)
 }

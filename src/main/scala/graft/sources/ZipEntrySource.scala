@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -26,8 +27,8 @@ import org.apache.spark.util.SerializableConfiguration
   * Schema: archive, entry, nested, method, compressed, size, content.
   *
   * This is the SURVEY §4.3 "DSv2 TableProvider only at scale" path for the
-  * S1/S5 sources: `etl.AuditPipeline.processDir` (binaryFile) hands each
-  * task a WHOLE archive blob and always materializes all bytes; this table
+  * S1/S5 sources: `etl.AuditPipeline.processDir` reads each archive whole
+  * in its task and always materializes all bytes; this table
   * plans one InputPartition per archive (ZIP is not splittable — the
   * central directory is global), prunes columns, and pushes entry/archive
   * predicates down to the reader, where they gate DECOMPRESSION:
@@ -49,7 +50,7 @@ import org.apache.spark.util.SerializableConfiguration
   *    broadcast-joins instead of defaulting to sort-merge.
   *
   * At cluster scale the FileSystem listing and opens go through the Hadoop
-  * conf captured from the driver (SerializableConfiguration), so the same
+  * conf captured from the driver and broadcast once per scan, so the same
   * code reads file://, hdfs:// or s3a:// archives. I/O and inflation work
   * are observable via [[ZipScanMetrics]] (process-wide counters; exact in
   * local[n], per-executor telemetry on a cluster).
@@ -328,21 +329,26 @@ final class ZipScan(path: String, recursive: Boolean, glob: String,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val hconf = new SerializableConfiguration(
-      SparkSession.active.sessionState.newHadoopConf())
-    ZipReaderFactory(hconf, required.fieldNames, nested, filters)
+  /** The Hadoop conf, broadcast once per scan as Spark's own file scans
+    * do: each task then deserializes a broadcast handle, not a whole
+    * `Configuration`. */
+  private lazy val hconf: Broadcast[SerializableConfiguration] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
   }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    ZipReaderFactory(hconf, required.fieldNames, nested, filters)
 }
 
 final case class ZipArchivePartition(archive: String, length: Long) extends InputPartition
 
-final case class ZipReaderFactory(hconf: SerializableConfiguration,
+final case class ZipReaderFactory(hconf: Broadcast[SerializableConfiguration],
                                   columns: Array[String], nested: Boolean,
                                   filters: Array[Filter]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new ZipPartitionReader(partition.asInstanceOf[ZipArchivePartition],
-      hconf, columns, nested, filters)
+      hconf.value.value, columns, nested, filters)
 }
 
 /** Reads one archive: central directory first (tail-only ranged reads),
@@ -359,7 +365,7 @@ final case class ZipReaderFactory(hconf: SerializableConfiguration,
   * (counted), but its entries then follow the same discipline against the
   * inner central directory, served from the in-memory inner blob. */
 final class ZipPartitionReader(part: ZipArchivePartition,
-                               hconf: SerializableConfiguration,
+                               hconf: org.apache.hadoop.conf.Configuration,
                                columns: Array[String], nested: Boolean,
                                filters: Array[Filter])
     extends PartitionReader[InternalRow] {
@@ -368,7 +374,7 @@ final class ZipPartitionReader(part: ZipArchivePartition,
 
   private lazy val src: ZipByteSource = {
     ZipScanMetrics.archivesOpened.incrementAndGet()
-    val s = new HadoopZipSource(new Path(part.archive), hconf.value, part.length)
+    val s = new HadoopZipSource(new Path(part.archive), hconf, part.length)
     srcOpened = true
     s
   }

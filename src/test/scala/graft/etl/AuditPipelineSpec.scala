@@ -3,10 +3,123 @@ package graft.etl
 import graft.SparkSpec
 import graft.sources.ZipCentral
 import java.nio.file.{Files, Paths}
+import org.apache.hadoop.fs.Path
+import scala.util.Random
 
 class AuditPipelineSpec extends SparkSpec {
 
-  test("processDir maps the audit kernel over a binaryFile scan") {
+  test("processDir lists exactly the archives a binaryFile scan reads, with the same path strings") {
+    val dir = Files.createTempDirectory("audits_listing").toString
+    def put(rel: String, bytes: Array[Byte] = Fixtures.minimalZip): Unit = {
+      val p = Paths.get(dir, rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, bytes)
+    }
+    put("a__x.org__2026-01-01.zip")
+    put("with space.zip")
+    put("nested/deeper/b.zip")
+    put("nested/c.ZIP")
+    put("readme.txt", "not an archive".getBytes)
+    put("nested/notes.zip.txt")
+    put("_hidden.zip")
+    put(".dot.zip")
+    put("_underscore_dir/d.zip")
+    put(".dot_dir/e.zip")
+    put("nested/_f.zip")
+    put("empty.zip", Array.emptyByteArray)
+
+    val scan = spark.read.format("binaryFile")
+      .option("pathGlobFilter", "*.zip")
+      .option("recursiveFileLookup", "true")
+      .load(dir).select("path").collect().map(_.getString(0)).sorted.toSeq
+    val listed = AuditPipeline.listArchives(spark, dir).map(_.path.toString).sorted
+    assert(listed == scan)
+    assert(listed.map(_.split('/').last).toSet == Set("a__x.org__2026-01-01.zip",
+      "with space.zip", "b.zip"))
+    assert(AuditPipeline.processDir(spark, dir).collect().map(_.path).sorted.toSeq == scan)
+  }
+
+  test("packing: each archive in exactly one bin, the bin count by rule, no bin past mean + largest") {
+    val rnd = new Random(20261020L)
+    def archives(n: Int): Seq[AuditPipeline.Archive] = Seq.tabulate(n) { i =>
+      val len = rnd.nextInt(4) match {
+        case 0 => 1L + rnd.nextInt(1000)
+        case 1 => 1L + rnd.nextInt(1 << 20)
+        case 2 => 1L + (rnd.nextLong() & 0xFFFFFFFFFL)
+        case _ => 4096L
+      }
+      AuditPipeline.Archive(new Path(s"file:/a/$i.zip"), len, Nil)
+    }
+    for (trial <- 0 until 400) {
+      val in = archives(rnd.nextInt(300))
+      val minBins = 1 + rnd.nextInt(40)
+      val bins = AuditPipeline.pack(in, minBins, Long.MaxValue)
+      assert(bins.flatten.sortBy(_.path.toString).toSeq == in.sortBy(_.path.toString), s"trial $trial")
+      assert(bins.length == math.min(in.length, minBins), s"trial $trial")
+      if (in.nonEmpty) {
+        val loads = bins.map(_.map(_.length).sum)
+        val bound = in.map(_.length).sum.toDouble / bins.length + in.map(_.length).max
+        assert(loads.forall(l => l > 0 && l <= bound), s"trial $trial: $loads > $bound")
+      }
+      // A cap on bytes per bin opens more bins; only a lone archive may exceed it.
+      val cap = 1L + rnd.nextInt(1 << 22)
+      val capped = AuditPipeline.pack(in, minBins, cap)
+      assert(capped.flatten.sortBy(_.path.toString).toSeq == in.sortBy(_.path.toString))
+      assert(capped.length >= math.min(in.length, minBins))
+      assert(capped.forall(b => b.length == 1 || b.map(_.length).sum <= cap), s"trial $trial")
+    }
+
+    val dir = Files.createTempDirectory("audits_bins").toString
+    for (i <- 0 until 30)
+      Files.write(Paths.get(s"$dir/c$i.zip"), if (i % 3 == 0) Fixtures.fullZip else Fixtures.minimalZip)
+    val want = math.min(30, AuditPipeline.BinsPerCore * spark.sparkContext.defaultParallelism)
+    assert(AuditPipeline.processDir(spark, dir).rdd.getNumPartitions == want)
+  }
+
+  test("a bin prefers the three hosts holding most of its bytes, never localhost") {
+    def a(name: String, len: Long, hosts: String*) =
+      AuditPipeline.Archive(new Path(s"hdfs://nn/a/$name.zip"), len, hosts)
+    val bin = Seq(a("p", 100, "h1", "h2"), a("q", 70, "h3", "localhost"),
+      a("r", 40, "h2", "h4"), a("s", 30, "h4", "h5"), a("t", 5))
+    assert(AuditPipeline.preferredHosts(bin) == Seq("h2", "h1", "h3"))
+    assert(AuditPipeline.preferredHosts(Seq(a("u", 9, "localhost"), a("v", 1))).isEmpty)
+
+    // The local file system reports one block on `localhost`: no preference.
+    val dir = Files.createTempDirectory("audits_hosts").toString
+    Files.write(Paths.get(s"$dir/one.zip"), Fixtures.minimalZip)
+    val Seq(one) = AuditPipeline.listArchives(spark, dir)
+    assert(one.hosts == Seq("localhost") && AuditPipeline.preferredHosts(Seq(one)).isEmpty)
+  }
+
+  test("an archive deleted after listing is its own ok=false row; the other rows are unchanged") {
+    val dir = Files.createTempDirectory("audits_deleted").toString
+    Files.write(Paths.get(s"$dir/acme__example.com__2026-08-12.zip"), Fixtures.fullZip)
+    Files.write(Paths.get(s"$dir/beta__other.org__2026-08-12.zip"), Fixtures.minimalZip)
+    Files.write(Paths.get(s"$dir/gone__x.org__2026-08-12.zip"), Fixtures.minimalZip)
+    val before = AuditPipeline.processDir(spark, dir).collect().map(r => r.client -> r).toMap
+    val ds = AuditPipeline.processDir(spark, dir)
+    Files.delete(Paths.get(s"$dir/gone__x.org__2026-08-12.zip"))
+    val after = ds.collect().map(r => r.client -> r).toMap
+    assert(after.keySet == Set("acme", "beta", "gone"))
+    assert(after("acme") == before("acme") && after("beta") == before("beta"))
+    val gone = after("gone")
+    assert(!gone.ok && gone.domain == "x.org" && gone.path == before("gone").path)
+    assert(gone.error.startsWith("java.io.FileNotFoundException"), gone.error)
+    assert(gone.normalizedJson.isEmpty && gone.scoresJson.isEmpty && gone.manifestJson.isEmpty)
+  }
+
+  test("an archive past the byte limit is its own ok=false row, read no further") {
+    val dir = Files.createTempDirectory("audits_big").toString
+    Files.write(Paths.get(s"$dir/big__x.org__r.zip"), Fixtures.fullZip)
+    val Seq(a) = AuditPipeline.listArchives(spark, dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val row = AuditPipeline.processArchive(a, conf, maxBytes = Fixtures.fullZip.length - 1L)
+    assert(!row.ok && row.client == "big" && row.error.startsWith("java.io.IOException"))
+    assert(row.error.contains(s"${Fixtures.fullZip.length} bytes, over the"))
+    assert(AuditPipeline.processArchive(a, conf).ok)
+  }
+
+  test("processDir maps the audit kernel over the listed archives") {
     val dir = Files.createTempDirectory("audits").toString
     Files.write(Paths.get(s"$dir/acme__example.com__2026-08-12.zip"),
       Fixtures.fullZip)
@@ -48,7 +161,7 @@ class AuditPipelineSpec extends SparkSpec {
 
     // The committed goldens (manually audited against the reference, then
     // locked by AuditEtlSpec) must byte-match what the DISTRIBUTED path
-    // emitted — closing the single-archive-kernel → binaryFile-fan-out
+    // emitted — closing the single-archive-kernel → distributed fan-out
     // loop end to end. Golden fixtures use client=acme/domain=example.com,
     // so only the full archive byte-matches all three documents; minimal's
     // manifest/scores (client-independent) byte-match its golden.

@@ -167,6 +167,28 @@ class ZipEntrySourceSpec extends SparkSpec {
     assert(read(s"$dir/a.zip").count() == Zips.entries(Fixtures.minimalZip).size.toLong)
   }
 
+  test("the reader factory ships the Hadoop conf as one broadcast per scan, not inline") {
+    val dir = writeDir("a.zip" -> Fixtures.minimalZip)
+    val df = read(dir)
+    val scan = df.queryExecution.sparkPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.get
+    val factories = Seq.fill(2)(scan.toBatch.createReaderFactory().asInstanceOf[ZipReaderFactory])
+    assert(factories.map(_.hconf.id).distinct.size == 1)
+    // Serializing the factory must never reach a SerializableConfiguration.
+    val out = new java.io.ObjectOutputStream(new ByteArrayOutputStream()) {
+      enableReplaceObject(true)
+      override def replaceObject(o: AnyRef): AnyRef = o match {
+        case _: org.apache.spark.util.SerializableConfiguration =>
+          throw new java.io.NotSerializableException("inline Hadoop conf")
+        case other => other
+      }
+    }
+    out.writeObject(factories.head)
+    out.close()
+    assert(df.count() == Zips.entries(Fixtures.minimalZip).size.toLong)
+  }
+
   test("corrupt stored entry (size != compressed size) fails loudly, never zero-pads") {
     val bytes = mixedMethodZip
     val stored = ZipCentral.centralDirectory(bytes).find(_.method == 0).get
